@@ -28,9 +28,9 @@ object Analytics {
 
     // ---- set-up: inputs (repeated) ----
     var docs: Seq[CrawlOracle.Doc] = Nil
-    val prepS = (1 to ctx.setupReps).map { _ =>
+    val prepS = (1 to Ctx.SetupReps).map { _ =>
       val t0 = System.nanoTime()
-      docs = Inputs.documents(nDocs, 20)
+      docs = Inputs.documents(nDocs)
       Inputs.writeDocuments(spark, docs, ctx.seed, input)
       Inputs.writeEmbeddings(spark, nVecs, ctx.seed, input)
       Stats.secs(t0, System.nanoTime())
@@ -83,11 +83,11 @@ object Analytics {
     res.extra("oracle_sql") = sqlPath
 
     val untraced = runs.filterNot(_.traced)
+    res.put("first_commit_s", Stats.median(untraced.map(_.perKey.head._2)), "s")
     if (!ctx.trace) {
       res.put("run_s", Stats.median(untraced.map(_.wallS)), "s")
       res.put("cpu_s", Stats.median(untraced.map(_.cpuS)), "s")
       res.put("urls_per_s", Stats.median(untraced.map(nDocs / _.wallS)), "1/s")
-      res.put("first_commit_s", Stats.median(untraced.map(_.perKey.head._2)), "s")
     } else {
       val traced = runs.filter(_.traced)
       res.put("round_s_p50", Stats.median(traced.flatMap(_.perKey.map(_._2))), "s")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 /** Run context shared by the workloads. */
 final class Ctx(val spark: SparkSession, val workDir: String, val seed: Long,
     val seconds: Double, val trace: Boolean, val small: Boolean,
-    val corruptDigest: Boolean, val setupReps: Int, val sessionS: Double) {
+    val corruptDigest: Boolean, val sessionS: Double) {
 
   def path(rel: String): String = Paths.get(workDir, rel).toString
 
@@ -53,6 +53,11 @@ final class Ctx(val spark: SparkSession, val workDir: String, val seed: Long,
   }
 }
 
+object Ctx {
+  /** Set-up repetitions per run; `setup_s` reports their median. */
+  val SetupReps = 3
+}
+
 /** Benchmark entry point, launched with plain `java` by `perfbench/run.py`:
   *
   * {{{
@@ -93,7 +98,7 @@ object BenchMain {
 
     val ctx = new Ctx(spark, work, args("--seed").toLong, args("--seconds").toDouble,
       args("--trace") == "1", flags("--small"), flags("--corrupt-digest"),
-      setupReps = 3, sessionS)
+      sessionS)
     val res = new Result
     try {
       workload match {

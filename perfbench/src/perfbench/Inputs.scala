@@ -11,12 +11,14 @@ import graft.spider.core.{Corpus, CrawlConfig, FrontierEntry, Hash64, UrlCanonic
   * same workload seed gives byte-identical inputs. The `documents` and
   * `embeddings` tables follow the schema of the repo's synthetic sf tables
   * (doc_id contiguous from 0, text of short technical words, lang label,
-  * source = src<doc_id mod hosts>). Their content comes from a fixed corpus
+  * source = src<doc_id mod Hosts>). Their content comes from a fixed corpus
   * seed, so the work a query does is the same for every workload seed; the
   * workload seed draws the crawl's seed URLs and the tables' row order. */
 object Inputs {
 
   final val CorpusSeed = 42L
+  /** Sources (crawl hosts) the documents are spread over. */
+  final val Hosts = 20
 
   private val words = Array(
     "a", "the", "batch", "part", "spark", "line", "column", "order", "small",
@@ -26,16 +28,16 @@ object Inputs {
     "der", "die", "el", "los", "de", "und", "en")
   private val langs = Array("en", "en", "en", "en", "zh", "zh", "de", "de", "fr", "fr", "es", "es")
 
-  /** `n` documents over `hosts` sources. About 1% of texts repeat an earlier
+  /** `n` documents over `Hosts` sources. About 1% of texts repeat an earlier
     * document's text, so the exact-dedup and near-dup operators bind. */
-  def documents(n: Int, hosts: Int): Seq[CrawlOracle.Doc] = {
+  def documents(n: Int): Seq[CrawlOracle.Doc] = {
     val rnd = new scala.util.Random(CorpusSeed)
     val texts = new Array[String](n)
     (0 until n).map { i =>
       texts(i) =
         if (i > 10 && rnd.nextInt(100) == 0) texts(rnd.nextInt(i))
         else Iterator.fill(8 + rnd.nextInt(93))(words(rnd.nextInt(words.length))).mkString(" ")
-      CrawlOracle.Doc(i.toLong, texts(i), langs(rnd.nextInt(langs.length)), s"src${i % hosts}")
+      CrawlOracle.Doc(i.toLong, texts(i), langs(rnd.nextInt(langs.length)), s"src${i % Hosts}")
     }
   }
 
@@ -65,7 +67,8 @@ object Inputs {
 
   /** Seed list: `perHost` documents of every host, drawn with the workload
     * seed, as oracle entries (the engine's rows are built from the same
-    * list). Equal seeds per host keep round volume independent of the draw. */
+    * list). Equal seeds per host keep round volume within a few percent
+    * across draws. */
   def seedEntries(docs: Seq[CrawlOracle.Doc], perHost: Int, seed: Long,
       cfg: CrawlConfig): Vector[CrawlOracle.Entry] = {
     val rnd = new scala.util.Random(seed ^ 0xc0ffee)

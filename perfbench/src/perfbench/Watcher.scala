@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
 /** Observes a crawl catalog from outside while the crawl runs: the time each
   * round's snapshot manifest first appears (the round's commit point), and,
   * when `countFiles`, every file the catalog writes. Polls the manifests
-  * every `pollMs` and walks the state directory every tenth poll; `stop()`
+  * every `Watcher.PollMs` and walks the state directory every tenth poll; `stop()`
   * ends the thread and waits for it. */
-final class Watcher(stateDir: String, countFiles: Boolean, pollMs: Long = 5L) {
+final class Watcher(stateDir: String, countFiles: Boolean) {
 
   private val snapDir = Paths.get(stateDir, "snapshots")
   private val commits = mutable.HashMap[Int, Long]()
@@ -41,7 +41,7 @@ final class Watcher(stateDir: String, countFiles: Boolean, pollMs: Long = 5L) {
     override def run(): Unit =
       while (running) {
         try poll() catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
-        Thread.sleep(pollMs)
+        Thread.sleep(Watcher.PollMs)
       }
   }
   thread.setDaemon(true)
@@ -61,6 +61,8 @@ final class Watcher(stateDir: String, countFiles: Boolean, pollMs: Long = 5L) {
 }
 
 object Watcher {
+  val PollMs = 5L
+
   /** Regular files under `root` that hold data or metadata (Spark's
     * `_SUCCESS` markers and `.crc` checksums excluded), with their sizes. */
   def dataFiles(root: Path): Seq[(String, Long)] = {
