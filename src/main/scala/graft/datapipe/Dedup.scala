@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.util.control.NonFatal
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * All pure DataFrame/Catalyst plans — shuffles only on the natural keys
@@ -46,12 +48,11 @@ object Dedup {
     * a release here drops BOTH pipelines' cached LSH frames (CacheManager
     * dedupes by plan, so the other pipeline recomputes, it does not break). */
   def releaseLshState(): Unit = lshState.synchronized {
-    lshState.foreach { df =>
+    try lshState.foreach { df =>
       try {
         if (!df.sparkSession.sparkContext.isStopped) df.unpersist(false)
-      } catch { case _: IllegalStateException => () } // session raced to stop
-    }
-    lshState.clear()
+      } catch { case NonFatal(_) => () } // e.g. the session raced to stop
+    } finally lshState.clear()
   }
 
   /** tokens = lowercase whitespace split. */
@@ -107,16 +108,19 @@ object Dedup {
   private[datapipe] def minhashSalts(numHashes: Int): Seq[Long] =
     permParams(numHashes).map(_._1)
 
+  /** 128-bit exact-text grouping key: two independently seeded xxhash64s
+    * of the text. A single 64-bit key carries ~3% birthday-collision odds
+    * at 10^9 distinct documents — a collision silently merges two different
+    * documents; the composite drops that below 1e-18 while the key stays
+    * 16 bytes (grouping by the raw text would shuffle full documents).
+    * `xxhash64(a, b)` chains: each argument seeds the next, so the salt
+    * goes FIRST — `xxhash64(t, salt)` would hash the salt seeded by the
+    * first half, a function of it that adds no bits. */
+  def textKey128(t: Column): Column =
+    struct(xxhash64(t), xxhash64(lit(0x9E3779B97F4A7C15L), t))
+
   /** Exact dedup: group identical texts, keep the smallest id.
     * Returns (idCol, n_copies). */
-  /** 128-bit exact-text grouping key: xxhash64 twice over decorrelated
-    * inputs. A single 64-bit key carries ~3% birthday-collision odds at
-    * 10^9 distinct documents — a collision silently merges two different
-    * documents; the composite drops that below 1e-18 while the key stays
-    * 16 bytes (grouping by the raw text would shuffle full documents). */
-  def textKey128(t: Column): Column =
-    struct(xxhash64(t), xxhash64(t, lit(0x9E3779B97F4A7C15L)))
-
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(textKey128(col(textCol)).as("text_key"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))

@@ -2,6 +2,9 @@ package graft.spider
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import scala.util.control.NonFatal
 
 import graft.spider.core._
 import graft.spider.sketch.Sketches
@@ -10,18 +13,18 @@ import graft.spider.state.{CrawlCatalog, SketchParams}
 /** Multi-round crawl driver (SURVEY.md §3.2): opens-or-resumes the IceLite
   * catalog, then runs rounds r0+1..R, committing a snapshot per round.
   *
-  * Snapshot commits run a DEPTH-1 PIPELINE (default `pipelinedCommits=true`):
-  * round r+1 consumes round r's in-memory state frames — `localCheckpoint`
-  * leaves, which cache the blocks AND truncate Catalyst lineage (no
-  * unbounded iterative plans) — while round r's table writes drain on pool
-  * threads; round r's manifest rename (the single atomic commit point)
-  * happens after its writes land and before round r+1's. With
-  * `pipelinedCommits=false`, or on the first round after a resume, state is
-  * instead read back from the committed snapshot (lineage truncation then
-  * comes from the files). Either way kill/resume replays identically: a
-  * killed run restarts from the last committed manifest and, because every
-  * ordering the contract depends on is a pure function of (state, round),
-  * reaches the same crawl ordering and URL-seen set as an uninterrupted run
+  * Snapshot commits run a DEPTH-1 PIPELINE: round r+1 consumes round r's
+  * in-memory state frames — `localCheckpoint` leaves, which cache the
+  * blocks AND truncate Catalyst lineage (no unbounded iterative plans) —
+  * while round r's table writes drain on pool threads; round r's manifest
+  * rename (the single atomic commit point) happens after its writes land
+  * and before round r+1's. The first round of a run (fresh or resumed)
+  * reads its state back from the committed snapshot instead (lineage
+  * truncation then comes from the files), and the final round commits
+  * before `run` returns. Kill/resume replays identically: a killed run
+  * restarts from the last committed manifest and, because every ordering
+  * the contract depends on is a pure function of (state, round), reaches
+  * the same crawl ordering and URL-seen set as an uninterrupted run
   * (pipelining only bounds the loss at ≤2 rounds of work instead of 1).
   */
 object CrawlDriver {
@@ -39,15 +42,9 @@ object CrawlDriver {
       seeds: Dataset[FrontierEntry],
       robots: Dataset[RobotsRule],
       cfg: CrawlConfig,
-      stateDir: String,
-      /** Snapshot-store factory — the Iceberg swap seam: any CrawlCatalog
-        * subclass overriding the manifest-persistence methods (e.g.
-        * [[graft.spider.state.SingleFileCatalog]]) drops in here; the
-        * conformance spec pins identical crawl results across stores. */
-      catalogFor: (String, SparkSession) => CrawlCatalog =
-        (d, s) => new CrawlCatalog(d, s)): CrawlCatalog = {
+      stateDir: String): CrawlCatalog = {
 
-    val catalog = catalogFor(stateDir, spark)
+    val catalog = new CrawlCatalog(stateDir, spark)
     val params = sketchParamsOf(cfg)
     // In-crawl expiration deletes below the newest compaction anchor at or
     // before latest-keepLast+1; the deepest in-flight reader under commit
@@ -64,11 +61,9 @@ object CrawlDriver {
     // timed re-crawl reads the source round's COMMITTED crawl log inside
     // round r (r0 = r+1-recrawlEvery): under depth-1 commit pipelining the
     // newest final manifest at round r's start is r-2, so the cadence must
-    // reach at least that far back (one less without pipelining).
-    require(cfg.recrawlEvery == 0 ||
-        cfg.recrawlEvery >= (if (cfg.pipelinedCommits) 3 else 2),
-      s"recrawlEvery=${cfg.recrawlEvery} must be >= " +
-        s"${if (cfg.pipelinedCommits) 3 else 2} (commit-pipeline depth): " +
+    // reach at least that far back.
+    require(cfg.recrawlEvery == 0 || cfg.recrawlEvery >= 3,
+      s"recrawlEvery=${cfg.recrawlEvery} must be >= 3 (commit-pipeline depth): " +
         "the source round's manifest must be final when its crawl log is re-read")
     // the hostRank signal re-reads the hostedges manifests of rounds
     // 1..hostRankFromRound on every resume; expiration deletes manifests
@@ -85,7 +80,11 @@ object CrawlDriver {
     val priorBucketing = bucketingKeys.map(k => k -> spark.conf.getOption(k))
     if (cfg.seenDsv2) bucketingKeys.foreach(spark.conf.set(_, "true"))
     try {
-    val robotsDf = robots.toDF().persist()
+    val robotsDf = robots.toDF()
+    // a run that fails frees this cache unless the caller had it cached
+    // already; a finished run leaves it for the next crawl over the same rules
+    val ownsRobotsCache = robotsDf.storageLevel == StorageLevel.NONE
+    robotsDf.persist()
     // materialize once; the exact count picks broadcast vs host-shuffle for
     // the per-round robots gate
     val robotsRows = robotsDf.count()
@@ -170,6 +169,9 @@ object CrawlDriver {
         roundF: Future[(RoundCounters, Option[Array[Byte]], Chain)])
     var pending: Option[Pend] = None
     var retired: Option[CrawlEngine.RoundOutput] = None
+    // the newest round output: pending, retired, or (when the pending
+    // round's finalize throws) neither
+    var current: Option[CrawlEngine.RoundOutput] = None
 
     // hostRank priority signal (cfg.hostRankFromRound = K): computed ONCE
     // per run — at the first round ≥ K+2, when round K's manifest is final
@@ -220,15 +222,36 @@ object CrawlDriver {
       out.broadcasts.foreach(_.destroy())
     }
 
-    // ADVICE r5: frames that live across rounds (retired round outputs, the
-    // run-long hostRank checkpoint) are freed in a finally so a mid-crawl
-    // exception after the boost is built cannot leak their blocks for the
-    // session's lifetime.
+    // Frees what outlives a round: the retired and newest round outputs and
+    // the run-long hostRank checkpoint; when the crawl failed, also the
+    // round whose commit is pending and the robots cache. Background work
+    // settles first: a write still planning would re-cache a frame freed
+    // under it. Round outputs are freed once each (destroying a broadcast
+    // twice throws), and a stopped SparkContext has nothing left to free.
+    def releaseRun(failed: Boolean): Unit = if (!spark.sparkContext.isStopped) {
+      pending.foreach(_.pc.abandon())
+      val outs = (pending.map(_.out) ++ current ++ retired).toSeq.distinct
+      outs.foreach { o =>
+        Await.ready(o.rawStatsF, Duration.Inf)
+        Await.ready(o.nextDequeueF, Duration.Inf)
+      }
+      outs.foreach(cleanup)
+      // the next round's prebuilt dequeue frames (a no-op after the final
+      // round, whose output carries none)
+      current.flatMap(_.nextDequeueF.value).flatMap(_.toOption).flatten
+        .foreach(_.cached.foreach(CrawlEngine.release))
+      // The hostRank boost lives for the whole run (it joins every boosted
+      // round); Dataset.unpersist is a no-op on its checkpoint-backed frame.
+      hostBoostCkpt.foreach(CrawlEngine.release)
+      if (failed && ownsRobotsCache) robotsDf.unpersist()
+    }
+
     try {
     for (r <- (startRound + 1) to cfg.rounds) {
       val tR = System.nanoTime()
-      // Inputs: from the previous round's in-memory frames when pipelining
-      // (identical content to its in-flight files), else from the snapshot.
+      // Inputs: from the previous round's in-memory frames (identical
+      // content to its in-flight files), or on a run's first round from
+      // the snapshot.
       def seenInput(committedRound: Int, extra: Option[DataFrame]) =
         CrawlEngine.SeenInput(
           catalog.readSeenBucketed(committedRound),
@@ -270,6 +293,7 @@ object CrawlDriver {
         hostState, r, cfg, prevF.map(c => (c.bloom, c.seenRows)),
         frontierInBound, pc.stage, robotsRows, prevLinksN, prebuilt,
         recrawlSrc, recrawlN, hostBoost(r))
+      current = Some(out)
       val tCompute = (System.nanoTime() - tR) / 1e9
 
       // Exact counters + incremental sketch: bloom(r) = bloom(r-1) ⊎ delta
@@ -304,7 +328,7 @@ object CrawlDriver {
       // write and drains on a pool thread like the other table writes.
       if (cfg.compactSeenEvery > 0 && r % cfg.compactSeenEvery == 0)
         pc.stageSeenCompaction(cfg.compactMaxFilesPerBucket)
-      if (cfg.pipelinedCommits && r < cfg.rounds) {
+      if (r < cfg.rounds) {
         pending = Some(Pend(r, pc, out, roundF))
       } else {
         val (counters, bloomAfter, _) = Await.result(roundF, Duration.Inf)
@@ -316,7 +340,7 @@ object CrawlDriver {
       // In-crawl expiration (VERDICT r3 task #2): bound the live manifest /
       // state-file count every K rounds instead of only after the crawl.
       // Runs after this round's commit block, so the newest committed
-      // manifest is r-1 (pipelined) or r; the horizon lands below the
+      // manifest is r-1 (r on the final round); the horizon lands below the
       // newest compaction anchor inside the retention window, which every
       // in-flight reader's seen resolution already sits above.
       if (cfg.expireKeepLast > 0 && cfg.expireEveryRounds > 0 &&
@@ -326,14 +350,13 @@ object CrawlDriver {
         f"[crawl] round $r compute=$tCompute%.1fs commit-drain=${(System.nanoTime() - tC) / 1e9}%.1fs " +
           s"fetched=${out.fetchedN}")
     }
-    } finally {
-      retired.foreach(cleanup)
-      // The hostRank boost lives for the whole run (it joins every boosted
-      // round); free its checkpoint blocks now — Dataset.unpersist is a no-op
-      // on checkpoint-backed frames, so go through the bridge like cleanup().
-      hostBoostCkpt.foreach(b => org.apache.spark.sql.GraftColumnBridge
-        .checkpointRdd(b).foreach(_.unpersist(blocking = false)))
+    } catch {
+      case NonFatal(e) =>
+        // the cleanup must not hide the crawl's own exception
+        try releaseRun(failed = true) catch { case NonFatal(s) => e.addSuppressed(s) }
+        throw e
     }
+    releaseRun(failed = false)
     // Post-crawl table maintenance (all commits final by here): bound the
     // catalog's metadata/state-file count by the retention window.
     if (cfg.expireKeepLast > 0) catalog.expireSnapshots(cfg.expireKeepLast)

@@ -1,10 +1,12 @@
 package graft.spider
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import scala.util.control.NonFatal
 
 import graft.spider.core.{Corpus, CrawlConfig, RoundCounters}
 import graft.spider.expr.SpiderFunctions._
@@ -140,7 +142,10 @@ object CrawlEngine {
       ranked: DataFrame,
       dequeued: DataFrame,
       residual: DataFrame,
-      extracted: DataFrame)
+      extracted: DataFrame) {
+    /** The frames persisted by [[buildDequeue]]. */
+    def cached: Seq[DataFrame] = Seq(eligible, hb, ranked, extracted)
+  }
 
   /** Build the dequeue/fetch plans for `round` over `frontier` (stage 1 +
     * the fetch join of stage 2; see runRound's stage map). `frontierInBound`
@@ -306,9 +311,7 @@ object CrawlEngine {
       s"prebuilt dequeue frames are for round ${p.round}, not $round"))
     val dq = prebuilt.getOrElse(
       buildDequeue(spark, pages, robots, frontier, round, cfg, frontierInBound, robotsRows))
-    val eligible = dq.eligible
     val hb = dq.hb
-    val ranked = dq.ranked
     val extracted = dq.extracted
 
     // 1a: narrow scheduling stats. groupBy(host, priority) over two thin
@@ -426,6 +429,12 @@ object CrawlEngine {
       (cand, bloomBc, flagged, newCkpt, flip)
     }
 
+    // A round that throws returns no RoundOutput for the driver to free, so
+    // it frees its own frames: first the pool work settles (a checkpoint
+    // still compiling would register blocks after the release), then
+    // everything this round cached.
+    var hostStateCkpt: Option[DataFrame] = None
+    try {
     if (cfg.verbose) System.err.println(
       s"[round $round] fetch submit @${(System.nanoTime() - t0) / 1e9}")
     val s2 = extracted.agg(count(lit(1)), coalesce(sum("n_links"), lit(0L))).head()
@@ -470,6 +479,7 @@ object CrawlEngine {
     // round's full plan inside the next and plan trees grow without bound
     // (the iterative-lineage trap; snapshot reads used to truncate this).
     val hostStateNextP = hostStateNext.localCheckpoint(false)
+    hostStateCkpt = Some(hostStateNextP)
     stage("crawled", crawledDelta)
     stage("hoststate", hostStateNextP)
     // hostRank signal source (cfg.hostRankFromRound): this round's distinct
@@ -517,7 +527,7 @@ object CrawlEngine {
     }
 
     val nextDequeueF: Future[Option[DequeueFrames]] =
-      if (round >= cfg.rounds || !cfg.pipelinedCommits) Future.successful(None)
+      if (round >= cfg.rounds) Future.successful(None)
       else for {
         (_, _, _, newCkpt, _) <- discoveryF
         residualCkpt <- residualCkptF
@@ -589,12 +599,28 @@ object CrawlEngine {
     }
 
     val ckptRdds = Seq(residualCkpt, newCkpt, hostStateNextP)
-      .flatMap(org.apache.spark.sql.GraftColumnBridge.checkpointRdd)
+      .flatMap(GraftColumnBridge.checkpointRdd)
     RoundOutput(round, eligibleN, dequeuedN, fetchedN, linksN, recrawlN, rawStatsF,
-      Seq(eligible, hb, ranked, extracted, cand, flagged,
-        hostStateNextP, frontierNext, seenDelta),
+      dq.cached ++ Seq(cand, flagged, hostStateNextP, frontierNext, seenDelta),
       ckptRdds, bloomBc.toSeq, frontierNext, seenDelta, hostStateNextP,
       nextDequeueF)
+    } catch {
+      case NonFatal(e) =>
+        Seq(hbRowF, residualCkptF, discoveryF).foreach(Await.ready(_, Duration.Inf))
+        (dq.cached ++ residualCkptF.value.flatMap(_.toOption) ++ hostStateCkpt).foreach(release)
+        discoveryF.value.flatMap(_.toOption).foreach { case (cand, bloomBc, flagged, newCkpt, _) =>
+          Seq(cand, flagged, newCkpt).foreach(release)
+          bloomBc.foreach(_.destroy())
+        }
+        throw e
+    }
+  }
+
+  /** Free a frame's cached blocks, `persist`ed or `localCheckpoint`ed
+    * (`Dataset.unpersist` is a no-op on the latter). */
+  private[spider] def release(df: DataFrame): Unit = {
+    df.unpersist()
+    GraftColumnBridge.checkpointRdd(df).foreach(_.unpersist(blocking = false))
   }
 
   /** J3: mark each candidate `is_new` against the exact seen set.

@@ -15,8 +15,6 @@ object Corpus {
   def urlOf(source: String, docId: Long): String =
     "https://" + source + ".example.com/doc/" + docId
 
-  def hostOf(source: String): String = source + ".example.com"
-
   def warcTsMicros(docId: Long): Long = WarcBaseMicros + docId * MicrosPerMinute
 
   /** Out-degree of a page: 1..4, a pure function of its url. */

@@ -58,8 +58,7 @@ case class CrawlConfig(
     seedPriority: Int = 100,
     /** restrict crawl to these hosts; None = hosts present in the corpus */
     scopeHosts: Option[Set[String]] = None,
-    /** hosts holding more than this share of the dequeued round are salted (J4) */
-    skewHostShare: Double = 0.25,
+    /** salt buckets per host of the two-phase dequeue ranking */
     saltFactor: Int = 16,
     /** salted two-phase dequeue ranking for mega-host skew (J4/W1) */
     twoPhaseDequeue: Boolean = false,
@@ -154,15 +153,6 @@ case class CrawlConfig(
       * history from a base at or above that anchor — their file sets are
       * disjoint from the sweep by construction. */
     expireEveryRounds: Int = 0,
-    /** Pipeline snapshot commits one round deep: round r+1 consumes round
-      * r's persisted in-memory state frames while round r's table writes
-      * drain in the background; round r's manifest is renamed (the atomic
-      * commit point) only after its writes land, before round r+1's. State
-      * content is identical either way (the frames are deterministic and the
-      * files are byte-equal); a killed run loses at most two rounds of work
-      * instead of one and replays to the same ordering/seen set. Off = every
-      * round reads its inputs back from the committed snapshot. */
-    pipelinedCommits: Boolean = true,
     /** Timed re-crawl — the reference's price-history loop (SURVEY.md §3.1-3):
       * every URL fetched in round r is RE-ADMITTED to the frontier at the
       * end of round r + recrawlEvery - 1 (so, budget permitting, it is
@@ -173,9 +163,10 @@ case class CrawlConfig(
       * duplicate DISCOVERY); re-admitted entries carry `recrawlPriority`
       * and compete for per-host budget like any frontier entry, so a
       * starved re-crawl simply stays pending. Engine constraint: must be
-      * ≥ 3 under `pipelinedCommits` (≥ 2 otherwise) so the source round's
-      * manifest is final when its crawl log is re-read; the oracle accepts
-      * any value ≥ 1. */
+      * ≥ 3 (the snapshot commits run one round deep, see
+      * [[graft.spider.CrawlDriver]]) so the source round's manifest is
+      * final when its crawl log is re-read; the oracle accepts any value
+      * ≥ 1. */
     recrawlEvery: Int = 0,
     /** Priority for re-admitted (timed re-crawl) frontier entries. Default =
       * seed priority: tracked items re-crawl ahead of freshly discovered

@@ -35,35 +35,21 @@ case class SketchParams(seenBuckets: Int, bloomShards: Int,
   * persisted parents, so the engine launches them as soon as each frame is
   * final (crawled/hoststate overlap the discovery anti-join) and the
   * manifest rename at `finalizeCommit` remains the single atomic point.
-  *
-  * The interface is deliberately narrow so a real Iceberg catalog can be
-  * substituted without touching the engine.
   */
 class CrawlCatalog(val root: String, spark: SparkSession) {
 
-  protected val mapper = new ObjectMapper()
-  protected def snapDir: Path = Paths.get(root, "snapshots")
+  private val mapper = new ObjectMapper()
+  private def snapDir: Path = Paths.get(root, "snapshots")
   private def dataDir(table: String, round: Int): String =
     s"$root/$table/data/r${"%05d".format(round)}"
   private def bloomPath(round: Int): Path =
     Paths.get(root, "sketches", s"round-${"%05d".format(round)}.bloom.bin")
   private def manifestPath(round: Int): Path =
     snapDir.resolve(s"snapshot-${"%05d".format(round)}.json")
+  private def expiredPath: Path = snapDir.resolve("expired.json")
 
   Files.createDirectories(snapDir)
   Files.createDirectories(Paths.get(root, "sketches"))
-
-  // ------------------------------------------------------------------
-  // Manifest persistence seam. Everything below this block — table data
-  // layout, staged commits, compaction, expiration ORDERING — is
-  // metadata-store-agnostic and reaches manifests only through these six
-  // methods, so a different snapshot store (e.g. Iceberg's single
-  // metadata.json lineage — see SingleFileCatalog) swaps in without
-  // touching the engine or the commit protocol. Contract: persist* must
-  // be atomic (a killed writer leaves either the old or the new state
-  // visible, never a torn one), and loadManifestNode(r) must reflect the
-  // last successful persistManifestNode(r, _).
-  // ------------------------------------------------------------------
 
   /** Highest round with a committed (atomically persisted) manifest. */
   def latestRound: Option[Int] = {
@@ -79,31 +65,13 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
     if (rs.isEmpty) None else Some(rs.max)
   }
 
-  protected def loadManifestNode(round: Int): JsonNode =
-    mapper.readTree(manifestPath(round).toFile)
-
-  protected def persistManifestNode(round: Int, json: String): Unit = {
-    val tmp = snapDir.resolve(s".tmp-snapshot-$round.json")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(round), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  protected def manifestExists(round: Int): Boolean =
-    Files.exists(manifestPath(round))
-
-  protected def deleteManifest(round: Int): Unit =
-    Files.deleteIfExists(manifestPath(round))
-
-  protected def loadExpiredNode(): Option[JsonNode] = {
-    val p = snapDir.resolve("expired.json")
-    if (Files.exists(p)) Some(mapper.readTree(p.toFile)) else None
-  }
-
-  protected def persistExpiredNode(json: String): Unit = {
-    val tmp = snapDir.resolve(".tmp-expired.json")
-    Files.writeString(tmp, json)
-    Files.move(tmp, snapDir.resolve("expired.json"), StandardCopyOption.ATOMIC_MOVE,
+  /** Metadata commit: write a temp file, then ATOMIC_MOVE it over `target`
+    * — a killed writer leaves either the old or the new file, never a torn
+    * one. */
+  private def writeAtomically(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(".tmp-" + target.getFileName)
+    Files.write(tmp, bytes)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
@@ -116,7 +84,7 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
       throw new IllegalStateException(
         s"snapshot $round is expired (horizon $expiredThrough): only crawled " +
           "data and counters survive expiration — see expireSnapshots")
-    loadManifestNode(round)
+    mapper.readTree(manifestPath(round).toFile)
   }
 
   /** Write one table's round delta/state and return (rows, per-partition
@@ -335,6 +303,11 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
       })
     }
 
+    /** Wait out every staged write, failed or not: for a commit the
+      * failed crawl will never finalize, before its frames are freed. */
+    def abandon(): Unit =
+      (staged.values ++ seenBase).foreach(Await.ready(_, Duration.Inf))
+
     def finalizeCommit(
         bloomBytes: Option[Array[Byte]],
         params: SketchParams,
@@ -370,11 +343,7 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
       }
 
       bloomBytes.foreach { bytes =>
-        val tmp = bloomPath(round).resolveSibling(
-          bloomPath(round).getFileName.toString + ".tmp")
-        Files.write(tmp, bytes)
-        Files.move(tmp, bloomPath(round), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
+        writeAtomically(bloomPath(round), bytes)
         node.put("bloom", bloomPath(round).toString)
       }
       val pn = node.putObject("sketch_params")
@@ -385,8 +354,8 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
 
       countersToJson(node.putObject("counters"), counters)
 
-      persistManifestNode(round,
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
+      writeAtomically(manifestPath(round),
+        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     }
   }
 
@@ -615,7 +584,8 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
   }
 
   private def loadExpired(): Option[ExpiredState] = {
-    val n = loadExpiredNode().getOrElse(return None)
+    if (!Files.exists(expiredPath)) return None
+    val n = mapper.readTree(expiredPath.toFile)
     val crawled = n.get("crawled").elements().asScala
       .map(c => (c.get("round").asInt(), c.get("path").asText())).toSeq
     val counters = n.get("counters").elements().asScala
@@ -656,14 +626,14 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
     // of any retained round r >= anchor resolve their seen history from a
     // base >= anchor and never touch an expired manifest.
     val anchor = (oldestKeep to (curThrough + 1) by -1).find { r =>
-      manifestExists(r) && manifest(r).has("seen_base")
+      Files.exists(manifestPath(r)) && manifest(r).has("seen_base")
     }
     def sweep(through: Int): Unit = {
       (0 to through).foreach { r =>
         Seq("frontier", "hoststate", "seen", "seen_base", "hostedges")
           .foreach(t => deleteTree(Paths.get(dataDir(t, r))))
         Files.deleteIfExists(bloomPath(r))
-        deleteManifest(r)
+        Files.deleteIfExists(manifestPath(r))
       }
     }
     val horizon = anchor.map(_ - 1).filter(_ > curThrough).getOrElse {
@@ -688,7 +658,7 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
     }
     prior.toSeq.flatMap(_.counters.values).foreach(addCounters)
     ((curThrough + 1) to horizon).foreach { r =>
-      if (manifestExists(r)) {
+      if (Files.exists(manifestPath(r))) {
         val m = manifest(r)
         val t = m.get("tables").get("crawled")
         if (t != null && t.get("rows").asLong() != 0L) {
@@ -697,7 +667,7 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
         addCounters(countersOf(r))
       }
     }
-    persistExpiredNode(mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
+    writeAtomically(expiredPath, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     expiredCache = Some(loadExpired()) // readers see the new horizon at once
 
     // 2. Delete what no retained reader can reach.

@@ -19,6 +19,16 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(out.forall(r => r.getLong(1) == 2L && r.getLong(0) < 100000))
   }
 
+  test("textKey128: the second half is not a function of the first") {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    val keys = docs.select(Dedup.textKey128(col("text")).as("k"))
+      .select(col("k.*")).collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(keys.length == 500)
+    // a salt chained AFTER the text would make the second half
+    // XXH64(salt, seed = first): 64 bits of key, not 128
+    assert(!keys.exists { case (a, b) => b == XXH64.hashLong(0x9E3779B97F4A7C15L, a) })
+  }
+
   test("minhashPairs: finds all injected near-duplicates, none spurious below threshold") {
     val near = docs.withColumn("doc_id", col("doc_id") + 100000)
       .withColumn("text", concat(col("text"), lit(" tail marker extra")))
