@@ -10,10 +10,10 @@ import scala.util.control.NonFatal
   *
   * All pure DataFrame/Catalyst plans — shuffles only on the natural keys
   * (text hash, LSH bucket, simhash band), so every stage scales by adding
-  * partitions. No driver-side loops, no UDFs: the MinHash signature and
-  * banding are built from xxhash64 / transform / aggregate built-ins
-  * (whole-stage-codegen friendly); SimHash is one custom Catalyst
-  * expression.
+  * partitions. No driver-side loops, no UDFs: shingles, the MinHash
+  * signature, its band keys and the SimHash fingerprint are kernels in
+  * [[HotPathKernels]], [[MinHashKernel]] and [[TextKernels]], called from
+  * whole-stage generated code.
   *
   * Scale notes (10^10-document corpora):
   *  - exact dedup: one hash-shuffle on xxhash64(text); map-side partial agg.
@@ -72,41 +72,18 @@ object Dedup {
   def distinctShingles(tokens: Column, k: Int): Column =
     HotPathFunctions.distinct_shingles(tokens, k)
 
-  /** Deterministic affine hash family for MinHash permutations. */
-  private def permParams(numHashes: Int): Seq[(Long, Long)] =
-    (0 until numHashes).map { i =>
-      def mix(x0: Long): Long = {
-        var x = x0 + 0x9e3779b97f4a7c15L
-        x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-        x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-        x ^ (x >>> 31)
-      }
-      (mix(i.toLong * 2 + 1) | 1L, mix(i.toLong * 2 + 2)) // odd multiplier
-    }
-
-  /** MinHash signature (array<long> of length numHashes) over a shingle
-    * array column. Each "permutation" re-hashes the shingle hash XORed with
-    * a per-function salt (bitwise ops + xxhash64: overflow-free under ANSI
-    * mode, unlike an affine a·h+b family).
-    *
-    * REFERENCE implementation (r6): the built-in composition evaluates
-    * `numHashes` interpreted `transform`/`array_min` passes per row, each
-    * allocating an intermediate array — measured as the dominant cost of
-    * dedup_minhash. The hot path ([[minhashState]]) computes the identical
-    * minima in ONE pass via [[MinHashMinimaExpr]]; HotPathEquivalenceSpec
-    * asserts exact equality against this formulation. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    val hashes = transform(shingles, s => xxhash64(s))
-    array(permParams(numHashes).map { case (a, _) =>
-      array_min(transform(hashes, h => xxhash64(h.bitwiseXOR(lit(a)))))
-    }: _*)
-  }
-
-  /** The salts of [[permParams]] — the XOR masks the one-pass
-    * [[MinHashMinimaExpr]] replays; `drop` selects the independent
-    * sub-split family above the signature's. */
+  /** The per-permutation salts of the MinHash signature (deterministic,
+    * seeded splitmix): permutation i re-hashes a shingle hash XORed with
+    * salt i (bitwise ops + xxhash64: overflow-free under ANSI mode, unlike
+    * an affine a·h+b family) — the masks [[MinHashKernel]] replays; `drop`
+    * selects the independent sub-split family above the signature's. */
   private[datapipe] def minhashSalts(numHashes: Int): Seq[Long] =
-    permParams(numHashes).map(_._1)
+    (0 until numHashes).map { i =>
+      var x = i.toLong * 2 + 1 + 0x9e3779b97f4a7c15L
+      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+      (x ^ (x >>> 31)) | 1L
+    }
 
   /** 128-bit exact-text grouping key: two independently seeded xxhash64s
     * of the text. A single 64-bit key carries ~3% birthday-collision odds
@@ -199,10 +176,10 @@ object Dedup {
     val base = reps0
       .withColumn("shingles", distinctShingles(tokensCol(col("text")), k))
       // materialize the shingle hashes once, then ALL numHashes permutation
-      // minima in one fused pass (r6: identical values to the
-      // minhashSignature reference composition, which evaluated numHashes
-      // interpreted transform+array_min passes per row — the measured
-      // dedup_minhash hot spot)
+      // minima in one fused pass (r6: identical values to the r5
+      // composition, which evaluated numHashes interpreted
+      // transform+array_min passes per row — the measured dedup_minhash hot
+      // spot; HotPathEquivalenceSpec keeps it as the reference)
       .withColumn("sh_hashes", transform(col("shingles"), s => xxhash64(s)))
       .withColumn("sig",
         HotPathFunctions.minhash_minima(col("sh_hashes"), minhashSalts(numHashes)))

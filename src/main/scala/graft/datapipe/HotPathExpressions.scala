@@ -1,16 +1,18 @@
 package graft.datapipe
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.GraftColumnBridge.{instanceCall, staticCall}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{XXH64, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.spider.core.Hash64
 
-/** Hot-path fused Catalyst expressions (optimization round r6).
+/** Hot-path fused kernels (optimization round r6).
   *
   * The r1-r5 operators expressed their per-row kernels as compositions of
   * higher-order built-ins (`transform`/`aggregate`/`zip_with`). Those are
@@ -20,93 +22,35 @@ import graft.spider.core.Hash64
   * intermediate array each — measured as the dominant cost of the
   * dedup_minhash / embed_* bench queries (OPTIMIZATION_r06.md §measure).
   *
-  * Each expression below replaces one such composition with a single
-  * tight-loop pass that is BIT-IDENTICAL to the built-in composition it
-  * replaces (same hash kernels, same floating-point accumulation order,
-  * same null semantics on every input that can occur in the operators'
-  * plans). `HotPathEquivalenceSpec` asserts exact equality — including the
-  * FP paths — against the original formulations, which stay in the
-  * codebase as the reference implementations.
+  * Each kernel below replaces one such composition with a single tight-loop
+  * pass over Catalyst values that is BIT-IDENTICAL to the built-in
+  * composition it replaces (same hash kernels, same floating-point
+  * accumulation order, same null semantics on every input that can occur in
+  * the operators' plans). [[HotPathFunctions]] exposes each as one Spark
+  * `StaticInvoke`/`Invoke`, so it compiles into whole-stage generated code.
+  * `HotPathEquivalenceSpec` asserts exact equality — including the FP
+  * paths — against the original formulations, which it keeps as the
+  * reference implementations.
   */
+object HotPathKernels {
+  private val space = UTF8String.fromString(" ")
+  private val comma = UTF8String.fromString(",")
 
-/** All MinHash permutation minima in ONE pass over a pre-hashed shingle
-  * array (`array<long>`). For salt `a` the permutation value of element `h`
-  * is `xxhash64(h XOR a)` (seed 42); output element i = min over the array
-  * — exactly `array_min(transform(hashes, h => xxhash64(h.bitwiseXOR(a))))`
-  * per salt, without materializing `salts.length` intermediate arrays.
-  * Null input / empty arrays reproduce the built-ins: null array → array of
-  * nulls (transform(null)=null, array_min(null)=null, array(...) non-null);
-  * empty array → array of nulls; a null ELEMENT contributes the seed (42L)
-  * exactly as `xxhash64(null XOR a)` does. */
-case class MinHashMinimaExpr(child: Expression, salts: Seq[Long])
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = false
-  override def prettyName: String = "minhash_minima"
-  @transient private lazy val saltArr: Array[Long] = salts.toArray
-
-  private def allNulls: GenericArrayData =
-    new GenericArrayData(new Array[Any](saltArr.length))
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return allNulls
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) return allNulls
-    val k = saltArr.length
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      if (arr.isNullAt(j)) {
-        // xxhash64(null) = the seed, regardless of the salt
-        var p = 0
-        while (p < k) { if (Hash64.Seed < mins(p)) mins(p) = Hash64.Seed; p += 1 }
-      } else {
-        val h = arr.getLong(j)
-        var p = 0
-        while (p < k) {
-          val c = XXH64.hashLong(h ^ saltArr(p), Hash64.Seed)
-          if (c < mins(p)) mins(p) = c
-          p += 1
-        }
-      }
-      j += 1
-    }
-    new GenericArrayData(mins)
-  }
-  override protected def withNewChildInternal(newChild: Expression): MinHashMinimaExpr =
-    copy(child = newChild)
-}
-
-/** Distinct k-token shingles in ONE pass over a token array — fused
-  * equivalent of `array_distinct(Dedup.shinglesCol(tokens, k))`:
-  * for n = size(tokens) < k one whole-text shingle (all tokens joined by
-  * " "), else one shingle per window i ∈ [0, n-k] joining tokens
-  * [i, i+k) — `concat_ws` semantics (null elements skipped, "" for
-  * all-null), distinct by first occurrence. Null input → null (matches
-  * `array_distinct(transform(sequence(0, size(null)-k)...)) = null`).
-  * Measured: the interpreted transform/slice/concat_ws composition was
-  * ~3 s of the dedup_minhash bench query; this is the same work in one
-  * tight loop over UTF8String parts. */
-case class DistinctShinglesExpr(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(k >= 1, "shingle width must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "distinct_shingles"
-  @transient private lazy val space =
-    org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-
-  override protected def nullSafeEval(input: Any): Any = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  /** Distinct k-token shingles in ONE pass over a token array — fused
+    * equivalent of `array_distinct(Dedup.shinglesCol(tokens, k))`:
+    * for n = size(tokens) < k one whole-text shingle (all tokens joined by
+    * " "), else one shingle per window i ∈ [0, n-k] joining tokens
+    * [i, i+k) — `concat_ws` semantics (null elements skipped, "" for
+    * all-null), distinct by first occurrence. Measured: the interpreted
+    * transform/slice/concat_ws composition was ~3 s of the dedup_minhash
+    * bench query; this is the same work in one tight loop. */
+  def distinctShingles(tokens: ArrayData, k: Int): ArrayData = {
+    val n = tokens.numElements()
     def joined(from: Int, len: Int): UTF8String = {
       val parts = new Array[UTF8String](len)
       var i = 0
       while (i < len) { // null tokens stay null — concatWs skips them
-        if (!arr.isNullAt(from + i)) parts(i) = arr.getUTF8String(from + i)
+        if (!tokens.isNullAt(from + i)) parts(i) = tokens.getUTF8String(from + i)
         i += 1
       }
       UTF8String.concatWs(space, parts: _*)
@@ -120,43 +64,56 @@ case class DistinctShinglesExpr(child: Expression, k: Int)
     }
     new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
   }
-  override protected def withNewChildInternal(newChild: Expression): DistinctShinglesExpr =
-    copy(child = newChild)
-}
 
-/** Cosine similarity of two `array<double>` columns in one fused pass —
-  * bit-identical to the `zip_with`/`aggregate` composition in
-  * [[Similarity.cosineReference]]: dot and both squared norms are
-  * independent sequential left-folds (same FP order as three separate
-  * `aggregate` calls), result `dot / (sqrt(na2) * sqrt(nb2))` with Spark's
-  * Divide semantics (zero divisor → null under non-ANSI, error under ANSI —
-  * `failOnError` is captured from the session at plan time exactly like
-  * `Divide` does). Any null element or length mismatch → null, matching the
-  * null-propagation of the zip_with/aggregate form. Inputs are coerced to
-  * `array<double>` (ImplicitCastInputTypes) — every operator pre-casts its
-  * vectors to double, so the coercion is a no-op on the query paths; a
-  * caller handing raw float arrays gets upcast-then-double math (the spec
-  * fixtures' tolerance-checked paths). */
-case class CosineSimExpr(left: Expression, right: Expression, failOnError: Boolean)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (y.numElements() != n) return null // zip_with pads with null → null
+  /** All LSH band keys in ONE pass over a MinHash signature (`array<long>`,
+    * length = bands·rows): element j is `xxhash64(concat_ws(",",
+    * transform(slice(sig, j*rows+1, rows), x => x.cast("string"))))` — the
+    * banded-key composition of [[Dedup.minhashCandidates]]. Bit-identity by
+    * construction: long→string is the same `Long.toString` the Cast uses,
+    * null elements are skipped by `UTF8String.concatWs` exactly as
+    * `concat_ws` skips them, and the hash IS Spark's `XxHash64Function`
+    * over the joined string (seed 42). */
+  def bandHashes(sig: ArrayData, rows: Int): ArrayData = {
+    val bands = sig.numElements() / rows
+    val out = new Array[Long](bands)
+    val parts = new Array[UTF8String](rows)
+    var j = 0
+    while (j < bands) {
+      var i = 0
+      while (i < rows) {
+        parts(i) =
+          if (sig.isNullAt(j * rows + i)) null
+          else UTF8String.fromString(java.lang.Long.toString(sig.getLong(j * rows + i)))
+        i += 1
+      }
+      out(j) = XxHash64Function.hash(UTF8String.concatWs(comma, parts: _*), StringType, Hash64.Seed)
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Cosine similarity of two `array<double>` values in one fused pass —
+    * bit-identical to the `zip_with`/`aggregate` composition: dot and both
+    * squared norms are independent sequential left-folds (same FP order as
+    * three separate `aggregate` calls), result `dot / (sqrt(na2) *
+    * sqrt(nb2))` with Spark's Divide semantics (zero divisor → null under
+    * non-ANSI, error under ANSI — `failOnError` is captured from the session
+    * at plan time exactly like `Divide` does). Any null element or length
+    * mismatch → null, matching the null-propagation of the zip_with form. */
+  def cosine(a: ArrayData, b: ArrayData, failOnError: Boolean): java.lang.Double = {
+    val n = a.numElements()
+    if (b.numElements() != n) return null // zip_with pads with null → null
     var dot = 0.0d
     var na2 = 0.0d
     var nb2 = 0.0d
     var i = 0
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = x.getDouble(i)
-      val yv = y.getDouble(i)
-      dot += xv * yv
-      na2 += xv * xv
-      nb2 += yv * yv
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = a.getDouble(i)
+      val y = b.getDouble(i)
+      dot += x * y
+      na2 += x * x
+      nb2 += y * y
       i += 1
     }
     val denom = math.sqrt(na2) * math.sqrt(nb2)
@@ -165,123 +122,28 @@ case class CosineSimExpr(left: Expression, right: Expression, failOnError: Boole
       null
     } else dot / denom
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
-    copy(left = l, right = r)
-}
 
-/** Dot products of a vector column against a constant matrix (the IVF
-  * centroid model / LSH plane family): output element i = sequential left
-  * fold of `vec(j) * matrix(i)(j)` — bit-identical to
-  * `transform(typedLit(matrix), c => aggregate(zip_with(vec, c, _*_), 0.0, _+_))`.
-  * Null vector → array of nulls (transform over the non-null literal);
-  * null element or length mismatch → that dot is null. */
-case class MatrixDotsExpr(child: Expression, matrix: Seq[Seq[Double]])
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = false
-  override def prettyName: String = "matrix_dots"
-  @transient private lazy val m: Array[Array[Double]] = matrix.map(_.toArray).toArray
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    val k = m.length
-    if (v == null) return new GenericArrayData(new Array[Any](k))
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    // null elements / length mismatches null the affected dots; scan once
-    var hasNull = false
-    var i = 0
-    while (i < n && !hasNull) { hasNull = arr.isNullAt(i); i += 1 }
-    val out = new Array[Any](k)
-    var p = 0
-    while (p < k) {
-      val row = m(p)
-      if (hasNull || row.length != n) {
-        out(p) = null // zip_with pad / null element → null fold
-      } else {
-        var acc = 0.0d
-        var j = 0
-        while (j < n) { acc += arr.getDouble(j) * row(j); j += 1 }
-        out(p) = acc
-      }
-      p += 1
-    }
-    new GenericArrayData(out)
-  }
-  override protected def withNewChildInternal(newChild: Expression): MatrixDotsExpr =
-    copy(child = newChild)
-}
-
-/** Sign-LSH bucket id of a vector against a constant plane family in one
-  * pass: bit i set iff dot(vec, planes(i)) > 0 — bit-identical to the
-  * per-plane `when(aggregate(zip_with(...)) > 0, 1<<i).otherwise(0)` sum in
-  * [[Similarity.lshBucketReference]] (null dot → predicate null → bit 0,
-  * so a null vector / null element / length mismatch yields bucket 0, and
-  * the result is non-nullable, exactly like the when/otherwise sum). */
-case class LshBucketExpr(child: Expression, planes: Seq[Seq[Double]])
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
-  override def prettyName: String = "lsh_bucket"
-  @transient private lazy val m: Array[Array[Double]] = planes.map(_.toArray).toArray
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return 0
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) { if (arr.isNullAt(i)) return 0; i += 1 }
-    var bucket = 0
-    var p = 0
-    while (p < m.length) {
-      val row = m(p)
-      if (row.length == n) { // mismatch → null dot → bit 0
-        var acc = 0.0d
-        var j = 0
-        while (j < n) { acc += arr.getDouble(j) * row(j); j += 1 }
-        if (acc > 0.0d) bucket |= (1 << p)
-      }
-      p += 1
-    }
-    bucket
-  }
-  override protected def withNewChildInternal(newChild: Expression): LshBucketExpr =
-    copy(child = newChild)
-}
-
-/** Every per-row text feature the TextStats operators consume, in ONE pass
-  * over the string (plus one pass over its lowercased form for the stopword
-  * hits) — replacing the 6 `regexp_replace` passes + 2 regex `split`s +
-  * 5 `array_distinct`/`array_intersect` evaluations of the r5 formulation.
-  *
-  * Field semantics are each bit-identical to the built-in composition they
-  * replace (reference implementations kept in [[TextStats]]; equality
-  * asserted in HotPathEquivalenceSpec):
-  *  - nc  = `length(text)` (code points, UTF8String.numChars);
-  *  - nt  = `TextStats.tokenCount(text)` — `when(length(trim(text)) = 0, 0)
-  *          .otherwise(size(split(trim(text), "\\s+")))`, where split keeps
-  *          Java `Pattern.split(…, -1)` semantics (leading "" when the
-  *          trimmed text starts with non-space whitespace, trailing "" when
-  *          it ends with whitespace — so nt = whitespace-run count + 1);
-  *  - np  = `length(regexp_replace(text, "[^\\p{Punct}]", ""))` — count of
-  *          ASCII POSIX-punct code points;
-  *  - nu  = `length(regexp_replace(text, "[^A-Z]", ""))`;
-  *  - h_* = `size(array_intersect(array_distinct(split(trim(lower(text)),
-  *          "\\s+")), stopwords(lang)))` — distinct lowercase tokens that
-  *          are stopwords of that language;
-  *  - cjk = count of code points in [0x4e00, 0x9fff];
-  *  - frd/esd/ded = count of code points in the language's diacritic set.
-  * Null text → null struct (each downstream formula reproduces the null
-  * behaviour of the original per-column expressions — asserted in the spec). */
-case class TextFeaturesExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  import TextFeaturesExpr._
-  override def dataType: DataType = schema
-  override def prettyName: String = "text_features"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+  /** Every per-row text feature the TextStats operators consume, in ONE pass
+    * over the string (plus one pass over its lowercased form for the
+    * stopword hits) — replacing the 6 `regexp_replace` passes + 2 regex
+    * `split`s + 5 `array_distinct`/`array_intersect` evaluations of the r5
+    * formulation. Fields (each bit-identical to the composition it
+    * replaces; asserted in HotPathEquivalenceSpec):
+    *  - nc  = `length(text)` (code points, UTF8String.numChars);
+    *  - nt  = `TextStats.tokenCount(text)` — `when(length(trim(text)) = 0, 0)
+    *          .otherwise(size(split(trim(text), "\\s+")))`, where split keeps
+    *          Java `Pattern.split(…, -1)` semantics (leading "" when the
+    *          trimmed text starts with non-space whitespace, trailing "" when
+    *          it ends with whitespace — so nt = whitespace-run count + 1);
+    *  - np  = `length(regexp_replace(text, "[^\\p{Punct}]", ""))` — count of
+    *          ASCII POSIX-punct code points;
+    *  - nu  = `length(regexp_replace(text, "[^A-Z]", ""))`;
+    *  - h_* = `size(array_intersect(array_distinct(split(trim(lower(text)),
+    *          "\\s+")), stopwords(lang)))` — distinct lowercase tokens that
+    *          are stopwords of that language;
+    *  - cjk = count of code points in [0x4e00, 0x9fff];
+    *  - frd/esd/ded = count of code points in the language's diacritic set. */
+  def textFeatures(u: UTF8String): InternalRow = {
     val nc = u.numChars()
     val s = u.toString
     var np = 0; var nu = 0; var cjk = 0; var frd = 0; var esd = 0; var ded = 0
@@ -327,12 +189,8 @@ case class TextFeaturesExpr(child: Expression)
     InternalRow(nc, nt, np, nu, hits(0), hits(1), hits(2), hits(3),
       cjk, frd, esd, ded)
   }
-  override protected def withNewChildInternal(newChild: Expression): TextFeaturesExpr =
-    copy(child = newChild)
-}
 
-object TextFeaturesExpr {
-  val schema: StructType = StructType(
+  val textFeaturesSchema: StructType = StructType(
     Seq("nc", "nt", "np", "nu", "h_en", "h_fr", "h_es", "h_de",
       "cjk", "frd", "esd", "ded")
       .map(StructField(_, IntegerType, nullable = false)))
@@ -344,7 +202,7 @@ object TextFeaturesExpr {
     * whitespace-run count + 1 (Java Pattern.split limit -1 keeps the
     * leading "" of a text starting with a separator and every trailing
     * ""). 0 for empty. */
-  private def tokenCountOf(trimmed: org.apache.spark.unsafe.types.UTF8String): Int = {
+  private def tokenCountOf(trimmed: UTF8String): Int = {
     if (trimmed.numChars() == 0) return 0
     val t = trimmed.toString
     var runs = 0
@@ -382,75 +240,144 @@ object TextFeaturesExpr {
   }
 }
 
-/** All LSH band keys in ONE pass over a MinHash signature (`array<long>`,
-  * length = bands·rows): output element j is
-  * `xxhash64(concat_ws(",", transform(slice(sig, j*rows+1, rows),
-  * x => x.cast("string"))))` — the banded-key composition of
-  * [[Dedup.minhashCandidates]] — without the interpreted lambda chain or
-  * the per-band slice arrays. Bit-identity by construction: long→string is
-  * the same `Long.toString` the Cast uses, null elements are skipped by
-  * `UTF8String.concatWs` exactly as `concat_ws` skips them, and the hash
-  * IS Spark's `XxHash64Function` over the joined string (seed 42). The
-  * child is never null on the operator paths (it is a
-  * [[MinHashMinimaExpr]] output, nullable=false), so the inherited
-  * null-propagating `nullSafeEval` contract is safe. */
-case class BandHashesExpr(child: Expression, rows: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(rows >= 1, "band rows must be >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "band_hashes"
-  @transient private lazy val comma =
-    org.apache.spark.unsafe.types.UTF8String.fromString(",")
+/** All MinHash permutation minima in ONE pass over a pre-hashed shingle
+  * array (`array<long>`). For salt `a` the permutation value of element `h`
+  * is `xxhash64(h XOR a)` (seed 42); output element i = min over the array
+  * — exactly `array_min(transform(hashes, h => xxhash64(h.bitwiseXOR(a))))`
+  * per salt, without materializing `salts.length` intermediate arrays.
+  * Null input / empty arrays reproduce the built-ins: null array → array of
+  * nulls (transform(null)=null, array_min(null)=null, array(...) non-null);
+  * empty array → array of nulls; a null ELEMENT contributes the seed (42L)
+  * exactly as `xxhash64(null XOR a)` does. */
+final case class MinHashKernel(salts: Seq[Long]) {
+  @transient private lazy val saltArr: Array[Long] = salts.toArray
 
-  override protected def nullSafeEval(input: Any): Any = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val arr = input.asInstanceOf[ArrayData]
-    val bands = arr.numElements() / rows
-    val out = new Array[Long](bands)
-    val parts = new Array[UTF8String](rows)
+  def minima(hashes: ArrayData): ArrayData = {
+    val k = saltArr.length
+    if (hashes == null || hashes.numElements() == 0)
+      return new GenericArrayData(new Array[Any](k))
+    val n = hashes.numElements()
+    val mins = new Array[Long](k)
+    java.util.Arrays.fill(mins, Long.MaxValue)
     var j = 0
-    while (j < bands) {
-      var i = 0
-      while (i < rows) {
-        parts(i) =
-          if (arr.isNullAt(j * rows + i)) null
-          else UTF8String.fromString(java.lang.Long.toString(arr.getLong(j * rows + i)))
-        i += 1
+    while (j < n) {
+      if (hashes.isNullAt(j)) {
+        // xxhash64(null) = the seed, regardless of the salt
+        var p = 0
+        while (p < k) { if (Hash64.Seed < mins(p)) mins(p) = Hash64.Seed; p += 1 }
+      } else {
+        val h = hashes.getLong(j)
+        var p = 0
+        while (p < k) {
+          val c = XXH64.hashLong(h ^ saltArr(p), Hash64.Seed)
+          if (c < mins(p)) mins(p) = c
+          p += 1
+        }
       }
-      out(j) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(UTF8String.concatWs(comma, parts: _*), StringType, Hash64.Seed)
       j += 1
+    }
+    new GenericArrayData(mins)
+  }
+
+  override def toString: String = s"MinHashKernel(${salts.length} salts)"
+}
+
+/** Dot products of a vector against a constant matrix (the IVF centroid
+  * model / an LSH plane family). */
+final case class MatrixKernel(matrix: Seq[Seq[Double]]) {
+  @transient private lazy val m: Array[Array[Double]] = matrix.map(_.toArray).toArray
+
+  /** Element i = sequential left fold of `vec(j) * matrix(i)(j)` —
+    * bit-identical to `transform(typedLit(matrix), c =>
+    * aggregate(zip_with(vec, c, _*_), 0.0, _+_))`. Null vector → array of
+    * nulls (transform over the non-null literal); null element or length
+    * mismatch → that dot is null. */
+  def dots(vec: ArrayData): ArrayData = {
+    val k = m.length
+    if (vec == null) return new GenericArrayData(new Array[Any](k))
+    val n = vec.numElements()
+    // null elements / length mismatches null the affected dots; scan once
+    var hasNull = false
+    var i = 0
+    while (i < n && !hasNull) { hasNull = vec.isNullAt(i); i += 1 }
+    val out = new Array[Any](k)
+    var p = 0
+    while (p < k) {
+      val row = m(p)
+      if (hasNull || row.length != n) {
+        out(p) = null // zip_with pad / null element → null fold
+      } else {
+        var acc = 0.0d
+        var j = 0
+        while (j < n) { acc += vec.getDouble(j) * row(j); j += 1 }
+        out(p) = acc
+      }
+      p += 1
     }
     new GenericArrayData(out)
   }
-  override protected def withNewChildInternal(newChild: Expression): BandHashesExpr =
-    copy(child = newChild)
+
+  /** Sign-LSH bucket id: bit p set iff [[dots]] element p is non-null and
+    * > 0 — the per-plane `when(dot > 0, 1 << p).otherwise(0)` sum (a null
+    * dot makes the predicate null → bit 0), so a null vector, a null
+    * element or a length mismatch gives bucket 0. */
+  def bucket(vec: ArrayData): Int = {
+    val d = dots(vec)
+    var b = 0
+    var p = 0
+    while (p < d.numElements()) {
+      if (!d.isNullAt(p) && d.getDouble(p) > 0.0d) b |= 1 << p
+      p += 1
+    }
+    b
+  }
+
+  override def toString: String =
+    s"MatrixKernel(${matrix.length}x${matrix.headOption.fold(0)(_.length)})"
 }
 
 object HotPathFunctions {
+  private val K = HotPathKernels
+
   def minhash_minima(shingleHashes: Column, salts: Seq[Long]): Column =
-    GraftColumnBridge.column(
-      MinHashMinimaExpr(GraftColumnBridge.expression(shingleHashes), salts))
+    instanceCall(MinHashKernel(salts), "minima", ArrayType(LongType, containsNull = true),
+      Seq(shingleHashes), propagateNull = false)
+
   // vector inputs are coerced to array<double> here (SimplifyCasts removes
   // the no-op on the query paths, which pre-cast to double); float-array
   // callers get upcast-then-double math (spec fixtures' tolerance paths)
   def cosine_sim(a: Column, b: Column): Column =
-    GraftColumnBridge.column(CosineSimExpr(
-      GraftColumnBridge.expression(a.cast("array<double>")),
-      GraftColumnBridge.expression(b.cast("array<double>")),
-      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
+    staticCall(K, "cosine", DoubleType,
+      Seq(a.cast("array<double>"), b.cast("array<double>"), lit(SQLConf.get.ansiEnabled)),
+      returnNullable = true)
+
   def matrix_dots(vec: Column, matrix: Seq[Seq[Double]]): Column =
-    GraftColumnBridge.column(
-      MatrixDotsExpr(GraftColumnBridge.expression(vec.cast("array<double>")), matrix))
+    instanceCall(MatrixKernel(matrix), "dots", ArrayType(DoubleType, containsNull = true),
+      Seq(vec.cast("array<double>")), propagateNull = false)
+
   def lsh_bucket(vec: Column, planes: Seq[Seq[Double]]): Column =
-    GraftColumnBridge.column(
-      LshBucketExpr(GraftColumnBridge.expression(vec.cast("array<double>")), planes))
+    instanceCall(MatrixKernel(planes), "bucket", IntegerType,
+      Seq(vec.cast("array<double>")), propagateNull = false)
+
+  /** Null text → null struct (each downstream formula reproduces the null
+    * behaviour of the original per-column expressions). Declared
+    * non-deterministic — the kernel is a pure function — so the optimizer
+    * keeps it in the projection that materializes the struct: a filter on
+    * its fields pushed below that projection would inline one full text
+    * pass per field reference, and whole-stage codegen does no
+    * common-subexpression elimination in filters. */
   def text_features(text: Column): Column =
-    GraftColumnBridge.column(TextFeaturesExpr(GraftColumnBridge.expression(text)))
-  def distinct_shingles(tokens: Column, k: Int): Column =
-    GraftColumnBridge.column(
-      DistinctShinglesExpr(GraftColumnBridge.expression(tokens), k))
-  def band_hashes(sig: Column, rows: Int): Column =
-    GraftColumnBridge.column(
-      BandHashesExpr(GraftColumnBridge.expression(sig), rows))
+    staticCall(K, "textFeatures", K.textFeaturesSchema, Seq(text), deterministic = false)
+
+  def distinct_shingles(tokens: Column, k: Int): Column = {
+    require(k >= 1, "shingle width must be >= 1")
+    staticCall(K, "distinctShingles", ArrayType(StringType, containsNull = false),
+      Seq(tokens, lit(k)))
+  }
+
+  def band_hashes(sig: Column, rows: Int): Column = {
+    require(rows >= 1, "band rows must be >= 1")
+    staticCall(K, "bandHashes", ArrayType(LongType, containsNull = false),
+      Seq(sig, lit(rows)))
+  }
 }

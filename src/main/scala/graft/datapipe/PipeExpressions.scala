@@ -1,39 +1,36 @@
 package graft.datapipe
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.GraftColumnBridge.staticCall
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.spider.core.Hash64
 
-/** Custom Catalyst expressions for the training-data pipeline operators.
-  * Scalar hot-path pieces that built-ins cannot express; everything else in
-  * this package composes `org.apache.spark.sql.functions`. */
-
-/** SimHash over a token array: per token, xxhash64 → each of the 64 bits
-  * votes ±1; the sign vector is the fingerprint. Near-duplicate texts land
-  * within a small Hamming distance. */
-case class SimHashExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+/** Shared pure-Scala kernels for the training-data pipeline operators —
+  * scalar hot-path pieces that built-ins cannot express. ONE implementation
+  * of each semantics, used by both the Catalyst call in [[PipeFunctions]]
+  * (distributed execution) and the single-threaded oracle replays that feed
+  * the DuckDB fixture checks (the extract_text pattern: one impl, two
+  * executions). Everything else in this package composes
+  * `org.apache.spark.sql.functions`. */
+object TextKernels {
+  /** SimHash over a token array: per token, xxhash64 → each of the 64 bits
+    * votes ±1; the sign vector is the fingerprint. Near-duplicate texts land
+    * within a small Hamming distance. */
+  def simhash(tokens: ArrayData): Long = {
     val votes = new Array[Int](64)
     var i = 0
-    val n = arr.numElements()
+    val n = tokens.numElements()
     while (i < n) {
-      if (!arr.isNullAt(i)) {
+      if (!tokens.isNullAt(i)) {
         // hash the UTF8String's backing bytes directly (identical to
         // Hash64.string: UTF8String stores UTF-8, XXH64 seed 42) — the
         // toString + getBytes round-trip was two copies per token (r6)
-        val s = arr.getUTF8String(i)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          s.getBaseObject, s.getBaseOffset, s.numBytes, Hash64.Seed)
+        val s = tokens.getUTF8String(i)
+        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, Hash64.Seed)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -47,17 +44,10 @@ case class SimHashExpr(child: Expression)
     while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
     out
   }
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpr =
-    copy(child = newChild)
-}
 
-/** Shared pure-Scala kernels — ONE implementation of each semantics, used
-  * by both the Catalyst expression (distributed execution) and the
-  * single-threaded oracle replays that feed the DuckDB fixture checks (the
-  * extract_text pattern: one impl, two executions). */
-object TextKernels {
   /** Winnowing-style fingerprint: Rabin-Karp rolling hash over UTF-8 bytes
-    * with window `w`; the minimum mixed window hash. */
+    * with window `w`; the minimum mixed window hash (a stable,
+    * shift-tolerant content fingerprint). */
   def rollingFingerprint(bytes: Array[Byte], w: Int): Long = {
     if (bytes.length == 0) return 0L
     if (bytes.length <= w) return Hash64.string(new String(bytes, "UTF-8"))
@@ -77,6 +67,11 @@ object TextKernels {
     }
     min
   }
+
+  /** [[rollingFingerprint]] of a text column value. */
+  def textFingerprint(text: UTF8String, w: Int): Long =
+    rollingFingerprint(text.getBytes, w)
+
   private def mix(h0: Long): Long = {
     var h = h0 ^ (h0 >>> 33)
     h *= 0xff51afd7ed558ccdL
@@ -85,25 +80,9 @@ object TextKernels {
   }
 }
 
-/** Winnowing-style document fingerprint: Rabin-Karp rolling hash over the
-  * UTF-8 bytes with window w; returns the minimum window hash (a stable,
-  * shift-tolerant content fingerprint). Kernel shared with the oracle
-  * replay: [[TextKernels.rollingFingerprint]]. */
-case class RollingFingerprintExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "doc_fingerprint"
-  override protected def nullSafeEval(text: Any, window: Any): Any =
-    TextKernels.rollingFingerprint(
-      text.asInstanceOf[UTF8String].getBytes, window.asInstanceOf[Int])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RollingFingerprintExpr =
-    copy(left = l, right = r)
-}
-
 object PipeFunctions {
   def simhash64(tokens: Column): Column =
-    GraftColumnBridge.column(SimHashExpr(GraftColumnBridge.expression(tokens)))
+    staticCall(TextKernels, "simhash", LongType, Seq(tokens))
   def doc_fingerprint(text: Column, window: Column): Column =
-    GraftColumnBridge.column(RollingFingerprintExpr(
-      GraftColumnBridge.expression(text), GraftColumnBridge.expression(window)))
+    staticCall(TextKernels, "textFingerprint", LongType, Seq(text, window))
 }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * right choice when |queries| is small). Scale path: random-hyperplane LSH
   * bucketing — the corpus is hashed once into buckets (one narrow column),
   * candidates come from the query's bucket only, then exact cosine re-ranks.
-  * Both are pure Catalyst plans (zip_with / aggregate built-ins), no UDFs.
+  * Both are pure Catalyst plans (built-ins plus the HotPathKernels dot
+  * products), no UDFs.
   *
   * Near-duplicate-by-embedding is the same kernel with a threshold instead
   * of top-k.
@@ -19,19 +20,11 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Cosine similarity of two array<double> columns — fused one-pass kernel
-    * (r6), bit-identical to [[cosineReference]] (same FP fold order, same
-    * null/zero-divisor semantics; HotPathEquivalenceSpec). */
+    * (r6), bit-identical to the r5 zip_with/aggregate composition (same FP
+    * fold order, same null/zero-divisor semantics; HotPathEquivalenceSpec
+    * keeps that composition as its reference). */
   def cosine(a: Column, b: Column): Column =
     HotPathFunctions.cosine_sim(a, b)
-
-  /** REFERENCE implementation of [[cosine]] — the r5 built-in composition
-    * (interpreted higher-order functions), kept for the equivalence spec. */
-  private[datapipe] def cosineReference(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0d), (acc, x) => acc + x))
-    dot / (na * nb)
-  }
 
   /** The shared exact re-rank tail of every top-k variant (brute, LSH, IVF):
     * drop self-matches, exact cosine, per-query rank window (ties broken by
@@ -58,7 +51,7 @@ object Similarity {
   /** Deterministic pseudo-random hyperplanes (seeded splitmix; no wall
     * clock / Random in the data path). `seedOffset` selects an independent
     * plane family (second-level bucketing, multi-table variants). */
-  private def planes(nPlanes: Int, dim: Int, seedOffset: Int = 0): Seq[Seq[Double]] = {
+  private[datapipe] def planes(nPlanes: Int, dim: Int, seedOffset: Int = 0): Seq[Seq[Double]] = {
     def mix(x0: Long): Long = {
       var x = x0 + 0x9e3779b97f4a7c15L
       x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -83,23 +76,10 @@ object Similarity {
   }
 
   /** Random-hyperplane LSH bucket id (int of nPlanes sign bits) — fused
-    * one-pass kernel (r6), bit-identical to [[lshBucketReference]]
+    * one-pass kernel (r6), bit-identical to the r5 per-plane composition
     * (HotPathEquivalenceSpec). */
   def lshBucket(vec: Column, nPlanes: Int, dim: Int, seedOffset: Int = 0): Column =
     HotPathFunctions.lsh_bucket(vec, planes(nPlanes, dim, seedOffset))
-
-  /** REFERENCE implementation of [[lshBucket]] — the r5 per-plane
-    * interpreted composition, kept for the equivalence spec. */
-  private[datapipe] def lshBucketReference(
-      vec: Column, nPlanes: Int, dim: Int, seedOffset: Int = 0): Column = {
-    val ps = planes(nPlanes, dim, seedOffset)
-    val bits = ps.zipWithIndex.map { case (plane, i) =>
-      val dot = aggregate(zip_with(vec, typedLit(plane), (x, y) => x * y),
-        lit(0.0d), (acc, x) => acc + x)
-      when(dot > 0, lit(1 << i)).otherwise(lit(0))
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Corpus side of the LSH index: the input plus a `bucket` column.
     * Public so a verification harness can materialize the bucketed corpus
@@ -165,14 +145,10 @@ object Similarity {
 
   /** Dot of `vec` against every centroid in the (normalized) literal model:
     * array<double> of length nList — fused one-pass kernel (r6),
-    * bit-identical to [[centroidDotsReference]] (HotPathEquivalenceSpec). */
+    * bit-identical to the r5 transform/aggregate composition
+    * (HotPathEquivalenceSpec). */
   private def centroidDots(vec: Column, cents: Seq[Seq[Double]]): Column =
     HotPathFunctions.matrix_dots(vec, cents)
-
-  /** REFERENCE implementation of [[centroidDots]] — kept for the spec. */
-  private[datapipe] def centroidDotsReference(vec: Column, cents: Seq[Seq[Double]]): Column =
-    transform(typedLit(cents), c =>
-      aggregate(zip_with(vec, c, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x))
 
   /** 0-based nearest-centroid index by cosine (centroids are normalized, and
     * the vector's own norm is constant across centroids, so argmax dot ==

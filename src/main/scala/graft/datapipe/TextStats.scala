@@ -7,27 +7,19 @@ import org.apache.spark.sql.functions._
   * quality scoring, fingerprinting.
   *
   * r6 optimization note: the per-row feature extraction (char-class counts,
-  * tokenization, stopword hits) is fused into ONE custom expression
-  * ([[TextFeaturesExpr]]) evaluated once per row at a projection boundary;
-  * the r5 composition of 6 `regexp_replace` passes + regex `split`s +
-  * `array_intersect`s is kept below as the REFERENCE implementation
-  * ([[langId]], [[qualityFeaturesReference]]) — HotPathEquivalenceSpec
-  * asserts the two produce identical values, and the bench/verify queries
-  * route through the fused path ([[withTextFeatures]] → [[langIdFrom]] /
-  * [[qualityFrom]]). */
+  * tokenization, stopword hits) is fused into ONE kernel
+  * ([[HotPathKernels.textFeatures]]) evaluated once per row at a projection
+  * boundary; the r5 composition of 6 `regexp_replace` passes + regex
+  * `split`s + `array_intersect`s survives as [[langId]] here and as the
+  * quality-features reference in HotPathEquivalenceSpec, which asserts the
+  * two produce identical values. The bench/verify queries route through the
+  * fused path ([[withTextFeatures]] → [[langIdFrom]] / [[qualityFrom]]). */
 object TextStats {
 
   /** Whitespace token count (0 for empty/blank). */
   def tokenCount(text: Column): Column =
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
-
-  /** BPE-ish subword count: tokens split further at letter/digit/punct
-    * boundaries — a cheap, deterministic proxy for tokenizer cost. */
-  def subwordCount(text: Column): Column =
-    when(length(trim(text)) === 0, lit(0))
-      .otherwise(size(split(trim(text),
-        "\\s+|(?<=[\\p{L}])(?=[\\p{N}])|(?<=[\\p{N}])(?=[\\p{L}])|(?=[\\p{Punct}])")))
 
   private val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "with", "for", "a"),
@@ -36,11 +28,11 @@ object TextStats {
     "de" -> Seq("der", "die", "das", "und", "ist", "von", "mit", "für", "ein", "nicht"))
 
   /** The stopword list of a language — single-sourced for the fused
-    * [[TextFeaturesExpr]] and the reference implementations below. */
+    * [[HotPathKernels.textFeatures]] and the reference implementations. */
   private[datapipe] def stopwordsOf(lang: String): Seq[String] = stopwords(lang)
 
   /** Diacritic evidence sets — single-sourced (regex char classes below and
-    * the fused expression's code-point sets are both built from these). */
+    * the fused kernel's code-point sets are both built from these). */
   private[datapipe] val frDiacritics = "àâçéèêëîïôùûœ"
   private[datapipe] val esDiacritics = "áéíóúñ¿¡"
   private[datapipe] val deDiacritics = "äöüß"
@@ -79,7 +71,7 @@ object TextStats {
       .as("lang_pred")
 
   // ------------------------------------------------------------------
-  // Fused path (r6): one TextFeaturesExpr struct per row, materialized at
+  // Fused path (r6): one textFeatures struct per row, materialized at
   // a projection boundary, consumed by field references.
   // ------------------------------------------------------------------
 
@@ -92,7 +84,7 @@ object TextStats {
       featCol: String = "__tf"): DataFrame =
     df.withColumn(featCol, HotPathFunctions.text_features(col(textCol)))
 
-  /** [[langId]] over a materialized [[TextFeaturesExpr]] struct column —
+  /** [[langId]] over a materialized [[HotPathKernels.textFeatures]] struct column —
     * identical values (same decision chain, evidence from the fused pass). */
   def langIdFrom(tf: Column): Column = {
     val cjkShare = tf.getField("cjk").cast("double") /
@@ -105,8 +97,8 @@ object TextStats {
   }
 
   /** Quality features + composite score from a materialized
-    * [[TextFeaturesExpr]] struct column — same columns and values as
-    * [[qualityFeaturesReference]], the formulas rebuilt over the fused
+    * [[HotPathKernels.textFeatures]] struct column — same columns and values
+    * as the r5 regex composition, the formulas rebuilt over the fused
     * feature fields. */
   def qualityFrom(df: DataFrame, tfCol: String): DataFrame = {
     val tf = col(tfCol)
@@ -126,7 +118,7 @@ object TextStats {
 
   /** The composite-score formula over the (already attached) ratio/hit
     * columns — shared by both paths. */
-  private def qualityScore(nTokens: Column): Column =
+  private[datapipe] def qualityScore(nTokens: Column): Column =
     when(nTokens < 5, lit(0.0d)).otherwise(
       lit(1.0d)
         - least(col("punct_ratio") * 2, lit(0.5d))
@@ -134,31 +126,8 @@ object TextStats {
         + least(col("stopword_hits").cast("double") * 0.02d, lit(0.2d)))
 
   /** Quality features + composite score for filtering (fused path): one
-    * [[TextFeaturesExpr]] pass per row; output columns identical to
-    * [[qualityFeaturesReference]]. */
+    * [[HotPathKernels.textFeatures]] pass per row. */
   def qualityFeatures(df: DataFrame, textCol: String): DataFrame =
     qualityFrom(withTextFeatures(df, textCol, "__tf_q"), "__tf_q")
       .drop("__tf_q")
-
-  /** REFERENCE implementation of [[qualityFeatures]] (the r5 built-in
-    * composition) — kept for the equivalence spec. */
-  private[datapipe] def qualityFeaturesReference(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val nChars = length(t)
-    val nTokens = tokenCount(t)
-    val punct = length(regexp_replace(t, "[^\\p{Punct}]", ""))
-    val upper = length(regexp_replace(t, "[^A-Z]", ""))
-    val stopHits = size(array_intersect(array_distinct(split(trim(lower(t)), "\\s+")),
-      typedLit(stopwords("en"))))
-    df.withColumn("n_chars", nChars)
-      .withColumn("n_tokens", nTokens)
-      .withColumn("mean_token_len",
-        when(nTokens > 0, nChars.cast("double") / nTokens.cast("double")).otherwise(lit(0.0d)))
-      .withColumn("punct_ratio",
-        punct.cast("double") / greatest(nChars.cast("double"), lit(1.0d)))
-      .withColumn("upper_ratio",
-        upper.cast("double") / greatest(nChars.cast("double"), lit(1.0d)))
-      .withColumn("stopword_hits", stopHits)
-      .withColumn("quality_score", qualityScore(nTokens))
-  }
 }

@@ -1,257 +1,171 @@
 package graft.spider.expr
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression, foldedValue, instanceCall, staticCall}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.GraftColumnBridge
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.spider.core.{Corpus, HtmlCodec, Templates, UrlCanonical}
+import graft.spider.sketch.Sketches
 
-/** Catalyst expressions for the crawl engine (SURVEY.md §2.2) — the north
-  * star requires URL canonicalization / extraction "expressed as Catalyst
-  * expressions rather than RDD lambdas". Each delegates to the ONE shared
-  * pure-Scala core implementation also used by the single-threaded oracle,
-  * so engine and oracle semantics cannot drift.
-  *
-  * All start as `CodegenFallback` (SURVEY.md §4.3): still runs inside
-  * whole-stage-codegen'd plans via the fallback path; promote to `doGenCode`
-  * only if the bench shows >10% on the extract stage.
-  */
+/** Catalyst kernels for the crawl engine (SURVEY.md §2.2) — the north star
+  * requires URL canonicalization / extraction "expressed as Catalyst
+  * expressions rather than RDD lambdas". Each builder in [[SpiderFunctions]]
+  * is one Spark `StaticInvoke`/`Invoke` of a kernel below, and each kernel is
+  * a thin adapter over the ONE shared pure-Scala core also used by the
+  * single-threaded oracle, so engine and oracle semantics cannot drift. The
+  * calls compile into whole-stage generated code (SURVEY.md §4.3). */
+object SpiderKernels {
+  private def str(s: UTF8String): String = if (s == null) null else s.toString
+  private def strs(a: ArrayData): Seq[String] =
+    (0 until a.numElements()).map(i => str(a.getUTF8String(i)))
+  private def utf8s(xs: Seq[String]): ArrayData =
+    new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
 
-/** E1: RFC 3986 canonical form of a URL. */
-case class UrlCanonicalizeExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "url_canonicalize"
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(UrlCanonical.canonicalize(input.asInstanceOf[UTF8String].toString))
-  override protected def withNewChildInternal(newChild: Expression): UrlCanonicalizeExpr =
-    copy(child = newChild)
-}
+  def canonicalize(url: UTF8String): UTF8String =
+    UTF8String.fromString(UrlCanonical.canonicalize(url.toString))
 
-/** E2: host component via the SAME shared core as the oracle
-  * (UrlCanonical.host). The built-in parse_url delegates to java.net.URI,
-  * which returns NULL for URLs it rejects (spaces, illegal chars) — the
-  * oracle would keep those candidates, so using parse_url on the discovery
-  * path would silently diverge on any non-pristine corpus. */
-case class UrlHostExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "url_host"
-  override protected def nullSafeEval(input: Any): Any = {
-    val h = UrlCanonical.host(input.asInstanceOf[UTF8String].toString)
-    if (h == null) null else UTF8String.fromString(h)
-  }
-  override protected def withNewChildInternal(newChild: Expression): UrlHostExpr =
-    copy(child = newChild)
-}
+  def host(url: UTF8String): UTF8String =
+    UTF8String.fromString(UrlCanonical.host(url.toString))
 
-/** E5: EC-Spider item-parsing semantics — extracted text of a page, under
-  * the page host's template ([[Templates.forHost]]: per-site selector
-  * dispatch, the reference's JD-vs-Taobao shape).
-  *
-  * Null-tolerant on the HOST side only: a null host (unparseable URL)
-  * dispatches to the default template via [[Templates.forHost]] — the same
-  * rule the oracle applies — instead of null-propagating, which would
-  * silently drop the row's text from the corpus. Null html is still null. */
-case class ExtractTextExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "extract_text"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val html = left.eval(input)
+  /** Null html → null; a null host dispatches to the default template
+    * ([[Templates.forHost]]), the rule the oracle applies. */
+  def extractText(html: Array[Byte], host: UTF8String): UTF8String =
+    if (html == null) null
+    else UTF8String.fromString(Templates.extractTextFor(str(host), html))
+
+  def extractOutlinks(html: Array[Byte]): ArrayData =
+    utf8s(HtmlCodec.extractOutlinks(html))
+
+  /** [[extractText]] and [[extractOutlinks]] from ONE UTF-8 decode, with the
+    * same null rules as [[extractText]]. */
+  def extractPage(html: Array[Byte], host: UTF8String): InternalRow =
     if (html == null) null
     else {
-      val host = right.eval(input)
-      UTF8String.fromString(Templates.extractTextFor(
-        if (host == null) null else host.asInstanceOf[UTF8String].toString,
-        html.asInstanceOf[Array[Byte]]))
+      val doc = new String(html, UTF_8)
+      InternalRow(UTF8String.fromString(Templates.forHost(str(host)).extractTextStr(doc)),
+        utf8s(HtmlCodec.extractOutlinksStr(doc)))
     }
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ExtractTextExpr =
-    copy(left = l, right = r)
+
+  def robotsAllows(url: UTF8String, prefixes: ArrayData): Boolean =
+    Corpus.robotsAllows(url.toString, strs(prefixes))
+
+  def wrapHtml(docId: Long, text: UTF8String, outlinks: ArrayData,
+      host: UTF8String, noiseLen: Int): Array[Byte] =
+    Templates.wrapFor(host.toString, docId, text.toString, strs(outlinks), noiseLen)
 }
 
-/** E6: ordered array of raw href values of `<a>` tags. */
-case class ExtractOutlinksExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "extract_outlinks"
-  override protected def nullSafeEval(input: Any): Any = {
-    val links = HtmlCodec.extractOutlinks(input.asInstanceOf[Array[Byte]])
-    new GenericArrayData(links.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): ExtractOutlinksExpr =
-    copy(child = newChild)
-}
-
-/** E5+E6 fused: one UTF-8 decode of the page producing
-  * struct(text, outlinks) — the fetch-extract hot path calls this once
-  * instead of decoding the html twice. Text follows the host's template
-  * (same dispatch as ExtractTextExpr); outlink markup is template-invariant
-  * (same HtmlCodec core). */
-case class ExtractPageExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = StructType(Seq(
-    StructField("text", StringType, nullable = false),
-    StructField("outlinks", ArrayType(StringType, containsNull = false), nullable = false)))
-  override def prettyName: String = "extract_page"
-  // null-tolerant on host, same contract as ExtractTextExpr
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val html = left.eval(input)
-    if (html == null) return null
-    val host = right.eval(input)
-    val bytes = html.asInstanceOf[Array[Byte]]
-    val doc = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    val tpl = Templates.forHost(
-      if (host == null) null else host.asInstanceOf[UTF8String].toString)
-    val text = tpl.extractTextStr(doc)
-    val links = HtmlCodec.extractOutlinksStr(doc)
-    org.apache.spark.sql.catalyst.InternalRow(
-      UTF8String.fromString(text),
-      new GenericArrayData(links.map(UTF8String.fromString).toArray[Any]))
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ExtractPageExpr =
-    copy(left = l, right = r)
-}
-
-/** E7: robots gate — true iff the url's path starts with no disallow prefix. */
-case class RobotsAllowsExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "robots_allows"
-  override protected def nullSafeEval(url: Any, prefixes: Any): Any = {
-    val u = url.asInstanceOf[UTF8String].toString
-    val arr = prefixes.asInstanceOf[ArrayData]
-    val ps = (0 until arr.numElements()).map { i =>
-      if (arr.isNullAt(i)) null else arr.getUTF8String(i).toString
-    }
-    Corpus.robotsAllows(u, ps)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsAllowsExpr =
-    copy(left = l, right = r)
-}
-
-/** S2 helper: deterministic Common-Crawl-style html wrap of (doc_id, text,
-  * outlinks) under the HOST's template — the fixture generator as a
-  * Catalyst expression (same [[Templates.forHost]] dispatch the extractor
-  * inverts). */
-case class WrapHtmlExpr(first: Expression, second: Expression, third: Expression,
-    fourth: Expression, noiseLen: Int = 0)
-    extends QuaternaryExpression with CodegenFallback {
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "wrap_html"
-  override protected def nullSafeEval(
-      docId: Any, text: Any, outlinks: Any, host: Any): Any = {
-    val arr = outlinks.asInstanceOf[ArrayData]
-    val links = (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
-    Templates.wrapFor(host.asInstanceOf[UTF8String].toString,
-      docId.asInstanceOf[Long], text.asInstanceOf[UTF8String].toString,
-      links, noiseLen)
-  }
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): WrapHtmlExpr =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
-/** F2: probabilistic membership test against a broadcast-as-literal Bloom
-  * filter (built by BloomAgg / TreeAggBloom). False positives only — used
-  * strictly as a prefilter in front of the exact anti-join, never as the
-  * seen-set semantics. The filter bytes arrive as a foldable literal, so the
-  * deserialized filter is shipped once per task, not per row. */
-case class BloomMightContainExpr(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain"
-
-  @transient private lazy val bloom: BloomFilter = {
-    val bytes = left.eval(null).asInstanceOf[Array[Byte]]
-    if (bytes == null) null else BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = right.eval(input)
-    if (v == null) null
-    else if (bloom == null) true // no filter yet → pass everything to the exact join
-    else bloom.mightContainLong(v.asInstanceOf[Long])
-  }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContainExpr =
-    copy(left = l, right = r)
-}
-
-/** F2 at scale: membership test against SHARDED Bloom filters shipped via
-  * `SparkContext.broadcast` — the filter bytes never enter the expression
-  * tree (no "Broadcasting large task binary" at any filter size; tasks fetch
-  * the blocks once per executor from the block manager). Shard = pmod(hash,
-  * n), matching [[graft.spider.sketch.Sketches.shardOf]] and the sharded
-  * aggregate that built the blob. False positives only — strictly a
-  * prefilter in front of the exact anti-join. */
-case class BloomShardedMightContainExpr(
-    filters: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]],
-    child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_sharded_might_contain"
-
+/** F2: Bloom membership over a collection of filters sharded by
+  * [[Sketches.shardOf]]; a lone filter is the one-shard case. False
+  * positives only — strictly a prefilter in front of the exact anti-join.
+  * A null (missing) filter passes everything on to that join. Each task
+  * deserializes the filters once. */
+sealed abstract class BloomShards extends Serializable {
+  protected def serialized: Array[Array[Byte]]
   @transient private lazy val shards: Array[BloomFilter] =
-    filters.value.map(b =>
-      if (b == null) null
-      else BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+    serialized.map(b => if (b == null) null else Sketches.bloomFrom(b))
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val h = input.asInstanceOf[Long]
-    val f = shards(graft.spider.sketch.Sketches.shardOf(h, shards.length))
-    if (f == null) true // missing shard → pass everything to the exact join
-    else f.mightContainLong(h)
+  def mightContain(h: Long): Boolean = {
+    val f = shards(Sketches.shardOf(h, shards.length))
+    f == null || f.mightContainLong(h)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomShardedMightContainExpr =
-    copy(child = newChild)
 }
 
-/** Column-API wrappers + SQL registration for the expressions above. */
-object SpiderFunctions {
-  private def col(e: Expression): Column = GraftColumnBridge.column(e)
-  private def ex(c: Column): Expression = GraftColumnBridge.expression(c)
+/** One filter whose bytes sit in the plan. */
+final case class InlineBloom(bytes: Seq[Byte]) extends BloomShards {
+  protected def serialized: Array[Array[Byte]] =
+    Array(if (bytes == null) null else bytes.toArray)
+  override def toString: String =
+    s"InlineBloom(${if (bytes == null) "null" else s"${bytes.length} B"})"
+}
 
-  def url_canonicalize(url: Column): Column = col(UrlCanonicalizeExpr(ex(url)))
-  def url_host(url: Column): Column = col(UrlHostExpr(ex(url)))
+/** Shards shipped through `SparkContext.broadcast`: the filter bytes never
+  * enter the plan, and tasks fetch the blocks once per executor. */
+final case class BroadcastBloom(filters: Broadcast[Array[Array[Byte]]]) extends BloomShards {
+  protected def serialized: Array[Array[Byte]] = filters.value
+}
+
+/** Column builders + SQL registration for the kernels above. */
+object SpiderFunctions {
+  private val K = SpiderKernels
+
+  /** E1: RFC 3986 canonical form of a URL. */
+  def url_canonicalize(url: Column): Column =
+    staticCall(K, "canonicalize", StringType, Seq(url))
+
+  /** E2: host component via the SAME shared core as the oracle
+    * (UrlCanonical.host). The built-in parse_url delegates to java.net.URI,
+    * which returns NULL for URLs it rejects (spaces, illegal chars) — the
+    * oracle would keep those candidates, so using parse_url on the discovery
+    * path would silently diverge on any non-pristine corpus. */
+  def url_host(url: Column): Column =
+    staticCall(K, "host", StringType, Seq(url), returnNullable = true)
+
+  /** E5: EC-Spider item-parsing semantics — extracted text of a page, under
+    * the page host's template (per-site selector dispatch, the reference's
+    * JD-vs-Taobao shape). Null-tolerant on the host side only: a null host
+    * (unparseable URL) keeps the row's text. */
   def extract_text(html: Column, host: Column): Column =
-    col(ExtractTextExpr(ex(html), ex(host)))
-  def extract_outlinks(html: Column): Column = col(ExtractOutlinksExpr(ex(html)))
+    staticCall(K, "extractText", StringType, Seq(html, host),
+      propagateNull = false, returnNullable = true)
+
+  /** E6: ordered array of raw href values of `<a>` tags. */
+  def extract_outlinks(html: Column): Column =
+    staticCall(K, "extractOutlinks", ArrayType(StringType, containsNull = false), Seq(html))
+
+  /** E5+E6 fused: struct(text, outlinks) from one decode of the page — the
+    * fetch-extract hot path. Host rule as in [[extract_text]]. */
   def extract_page(html: Column, host: Column): Column =
-    col(ExtractPageExpr(ex(html), ex(host)))
+    staticCall(K, "extractPage", StructType(Seq(
+      StructField("text", StringType, nullable = false),
+      StructField("outlinks", ArrayType(StringType, containsNull = false), nullable = false))),
+      Seq(html, host), propagateNull = false, returnNullable = true)
+
+  /** E7: robots gate — true iff the url's path starts with no disallow prefix. */
   def robots_allows(url: Column, prefixes: Column): Column =
-    col(RobotsAllowsExpr(ex(url), ex(prefixes)))
+    staticCall(K, "robotsAllows", BooleanType, Seq(url, prefixes))
+
+  /** S2 helper: deterministic Common-Crawl-style html wrap of (doc_id, text,
+    * outlinks) under the HOST's template — the fixture generator the
+    * extractor inverts. */
   def wrap_html(docId: Column, text: Column, outlinks: Column, host: Column,
       noiseLen: Int = 0): Column =
-    col(WrapHtmlExpr(ex(docId), ex(text), ex(outlinks), ex(host), noiseLen))
-  def bloom_might_contain(bloomBytes: Column, value: Column): Column =
-    col(BloomMightContainExpr(ex(bloomBytes), ex(value)))
-  def bloom_sharded_might_contain(
-      filters: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]],
+    staticCall(K, "wrapHtml", BinaryType, Seq(docId, text, outlinks, host, lit(noiseLen)))
+
+  /** Membership in one filter given as a foldable bytes column (a literal);
+    * the bytes are read once, here, when the plan is built. */
+  def bloom_might_contain(bloomBytes: Column, value: Column): Column = {
+    val bytes = foldedValue(bloomBytes).asInstanceOf[Array[Byte]]
+    instanceCall(InlineBloom(if (bytes == null) null else ArraySeq.unsafeWrapArray(bytes)),
+      "mightContain", BooleanType, Seq(value), returnNullable = bytes == null)
+  }
+
+  /** Membership in the broadcast sharded filters the crawl's seen sketch
+    * builds (shard = pmod(hash, n), as in the sharded aggregate). */
+  def bloom_sharded_might_contain(filters: Broadcast[Array[Array[Byte]]],
       value: Column): Column =
-    col(BloomShardedMightContainExpr(filters, ex(value)))
+    instanceCall(BroadcastBloom(filters), "mightContain", BooleanType, Seq(value))
 
   /** Register as SQL temp functions so `spark.sql("... url_canonicalize(u)")`
-    * works too. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("url_canonicalize",
-      (args: Seq[Expression]) => UrlCanonicalizeExpr(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("url_host",
-      (args: Seq[Expression]) => UrlHostExpr(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("extract_text",
-      (args: Seq[Expression]) => ExtractTextExpr(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("extract_outlinks",
-      (args: Seq[Expression]) => ExtractOutlinksExpr(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("robots_allows",
-      (args: Seq[Expression]) => RobotsAllowsExpr(args(0), args(1)), "scala_udf")
+    * works too — through the builders above. */
+  def registerAll(spark: SparkSession): Unit = {
+    def reg(name: String, build: Seq[Column] => Column): Unit =
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
+        (args: Seq[Expression]) => expression(build(args.map(column))), "scala_udf")
+    reg("url_canonicalize", a => url_canonicalize(a(0)))
+    reg("url_host", a => url_host(a(0)))
+    reg("extract_text", a => extract_text(a(0), a(1)))
+    reg("extract_outlinks", a => extract_outlinks(a(0)))
+    reg("robots_allows", a => robots_allows(a(0), a(1)))
   }
 }

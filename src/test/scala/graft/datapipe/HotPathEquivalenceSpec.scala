@@ -1,18 +1,71 @@
 package graft.datapipe
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.spider.SparkTestBase
 
-/** r6 optimization contract: every fused hot-path expression produces
+/** r6 optimization contract: every fused hot-path kernel produces
   * BIT-IDENTICAL results to the r5 built-in composition it replaced —
   * including the floating-point paths (same fold order) and the null/edge
-  * semantics the operators can encounter. The references stay in the
-  * codebase precisely so this spec can keep asserting equality. */
+  * semantics the operators can encounter. The r5 compositions live here, as
+  * the references this spec keeps asserting equality against. */
 class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
+
+  /** MinHash signature (array<long> of length numHashes) over a shingle
+    * array column: per salt, `numHashes` interpreted transform/array_min
+    * passes, each allocating an intermediate array. */
+  private def minhashSignature(shingles: Column, numHashes: Int): Column = {
+    val hashes = transform(shingles, s => xxhash64(s))
+    array(Dedup.minhashSalts(numHashes).map(a =>
+      array_min(transform(hashes, h => xxhash64(h.bitwiseXOR(lit(a)))))): _*)
+  }
+
+  private def cosineReference(a: Column, b: Column): Column = {
+    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, x) => acc + x))
+    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0d), (acc, x) => acc + x))
+    dot / (na * nb)
+  }
+
+  /** The r5 per-plane LSH bucket: one interpreted dot product per plane. */
+  private def lshBucketReference(
+      vec: Column, nPlanes: Int, dim: Int, seedOffset: Int = 0): Column = {
+    val ps = Similarity.planes(nPlanes, dim, seedOffset)
+    val bits = ps.zipWithIndex.map { case (plane, i) =>
+      val dot = aggregate(zip_with(vec, typedLit(plane), (x, y) => x * y),
+        lit(0.0d), (acc, x) => acc + x)
+      when(dot > 0, lit(1 << i)).otherwise(lit(0))
+    }
+    bits.reduce(_ + _)
+  }
+
+  private def centroidDotsReference(vec: Column, cents: Seq[Seq[Double]]): Column =
+    transform(typedLit(cents), c =>
+      aggregate(zip_with(vec, c, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x))
+
+  /** The r5 regex/split composition of [[TextStats.qualityFeatures]]. */
+  private def qualityFeaturesReference(df: DataFrame, textCol: String): DataFrame = {
+    val t = col(textCol)
+    val nChars = length(t)
+    val nTokens = TextStats.tokenCount(t)
+    val punct = length(regexp_replace(t, "[^\\p{Punct}]", ""))
+    val upper = length(regexp_replace(t, "[^A-Z]", ""))
+    val stopHits = size(array_intersect(array_distinct(split(trim(lower(t)), "\\s+")),
+      typedLit(TextStats.stopwordsOf("en"))))
+    df.withColumn("n_chars", nChars)
+      .withColumn("n_tokens", nTokens)
+      .withColumn("mean_token_len",
+        when(nTokens > 0, nChars.cast("double") / nTokens.cast("double")).otherwise(lit(0.0d)))
+      .withColumn("punct_ratio",
+        punct.cast("double") / greatest(nChars.cast("double"), lit(1.0d)))
+      .withColumn("upper_ratio",
+        upper.cast("double") / greatest(nChars.cast("double"), lit(1.0d)))
+      .withColumn("stopword_hits", stopHits)
+      .withColumn("quality_score", TextStats.qualityScore(nTokens))
+  }
 
   private def assertSameColumns(df: DataFrame): Unit = {
     val rows = df.collect()
@@ -45,8 +98,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val salts = Dedup.minhashSalts(66)
     assertSameColumns(df.select(
       HotPathFunctions.minhash_minima(col("shh"), salts),
-      array(salts.map(a =>
-        array_min(transform(col("shh"), h => xxhash64(h.bitwiseXOR(lit(a)))))): _*)))
+      minhashSignature(col("sh"), 66)))
     // empty array edge: both sides give an array of nulls
     val empty = Seq(Seq.empty[Long]).toDF("shh")
     assertSameColumns(empty.select(
@@ -117,12 +169,12 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val df = pairs.toDF("a", "b")
     assertSameColumns(df.select(
       Similarity.cosine(col("a"), col("b")),
-      Similarity.cosineReference(col("a"), col("b"))))
+      cosineReference(col("a"), col("b"))))
     // length mismatch → null on both sides
     val mism = Seq((dvec(1, 8), dvec(2, 4))).toDF("a", "b")
     assertSameColumns(mism.select(
       Similarity.cosine(col("a"), col("b")),
-      Similarity.cosineReference(col("a"), col("b"))))
+      cosineReference(col("a"), col("b"))))
   }
 
   test("lsh_bucket ≡ the lshBucketReference composition") {
@@ -130,7 +182,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     for (nPlanes <- Seq(4, 8, 13); off <- Seq(0, 8))
       assertSameColumns(vecs.select(
         Similarity.lshBucket(col("v"), nPlanes, 64, off),
-        Similarity.lshBucketReference(col("v"), nPlanes, 64, off)))
+        lshBucketReference(col("v"), nPlanes, 64, off)))
   }
 
   test("matrix_dots ≡ the centroidDotsReference composition (exact doubles)") {
@@ -138,7 +190,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val vecs = (0 until 40).map(i => Tuple1(dvec(i, 64))).toDF("v")
     assertSameColumns(vecs.select(
       HotPathFunctions.matrix_dots(col("v"), cents),
-      Similarity.centroidDotsReference(col("v"), cents)))
+      centroidDotsReference(col("v"), cents)))
   }
 
   private val trickyTexts = Seq(
@@ -188,7 +240,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
       TextStats.withTextFeatures(df, "text")
         .select(TextStats.langIdFrom(col("__tf")), TextStats.langId(col("text"))))
     val fused = TextStats.qualityFeatures(df, "text")
-    val ref = TextStats.qualityFeaturesReference(df, "text")
+    val ref = qualityFeaturesReference(df, "text")
     assert(fused.columns.toSeq == ref.columns.toSeq)
     val cols = Seq("n_chars", "n_tokens", "mean_token_len", "punct_ratio",
       "upper_ratio", "stopword_hits", "quality_score").map(col)
@@ -206,7 +258,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val cols = Seq("n_chars", "n_tokens", "mean_token_len", "punct_ratio",
       "upper_ratio", "stopword_hits", "quality_score").map(col)
     val a = TextStats.qualityFeatures(docs, "text").select(cols: _*).collect().map(_.toSeq)
-    val b = TextStats.qualityFeaturesReference(docs, "text").select(cols: _*).collect().map(_.toSeq)
+    val b = qualityFeaturesReference(docs, "text").select(cols: _*).collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq)
   }
 }
