@@ -5,13 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.datapipe.{Dedup, HotPathFunctions, PipeFunctions}
+import graft.spider.PlanShapes.{finalPlan, withConfs}
 import graft.spider.SparkTestBase
 import graft.spider.core.Templates
 import graft.spider.expr.SpiderFunctions
@@ -92,11 +92,6 @@ class KernelCodegenSpec extends AnyFunSuite with SparkTestBase {
       "doc_fingerprint" -> doc_fingerprint(col("text"), lit(4)))
   }
 
-  private def finalPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
-    case a: AdaptiveSparkPlanExec => a.executedPlan
-    case p => p
-  }
-
   private def isKernelCall(e: Expression): Boolean = e match {
     case s: StaticInvoke => s.staticObject.getName.startsWith("graft.")
     case i: Invoke => i.targetObject.dataType match {
@@ -112,16 +107,6 @@ class KernelCodegenSpec extends AnyFunSuite with SparkTestBase {
       case _: InputAdapter => Nil
       case _ => p.children.flatMap(inCodegenStage)
     })
-
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("(a) every kernel runs inside a WholeStageCodegen span, with no CodegenFallback") {
     builders.foreach { case (name, k) =>

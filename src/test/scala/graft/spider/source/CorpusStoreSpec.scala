@@ -3,9 +3,11 @@ package graft.spider.source
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.spider.PlanShapes.{exchangesAbove, finalPlan, nodes}
 import graft.spider.SparkTestBase
 import graft.spider.core.CrawlConfig
 import graft.spider.synth.{CorpusStore, PagesSynth}
@@ -42,8 +44,13 @@ class CorpusStoreSpec extends AnyFunSuite with SparkTestBase {
     val probe = pages.select("url").sample(0.3, seed = 7)
       .withColumn("rank_in_host", lit(1))
     val joined = pages.join(probe.hint("shuffle_hash"), Seq("url"), "inner")
-    assert(!corpusSideExchanged(joined),
-      s"corpus side re-shuffled:\n${joined.queryExecution.executedPlan}")
+    val plan = finalPlan(joined)
+    val bucketedScan: SparkPlan => Boolean = {
+      case s: FileSourceScanExec => s.bucketedScan
+      case _ => false
+    }
+    assert(nodes(plan).exists(bucketedScan), s"no bucketed scan in plan:\n$plan")
+    assert(exchangesAbove(plan)(bucketedScan).isEmpty, s"corpus side re-shuffled:\n$plan")
     assert(joined.count() == probe.count())
   }
 
@@ -63,21 +70,5 @@ class CorpusStoreSpec extends AnyFunSuite with SparkTestBase {
     val viaMemory = crawl(
       PagesSynth.pages(spark, sfDir, replicate = 2, spreadHosts = true).cache())
     assert(viaStore.sameElements(viaMemory))
-  }
-
-  /** Walk the physical plan: true if any Exchange sits above the bucketed
-    * file scan (identified by its bucket metadata in the scan string). */
-  private def corpusSideExchanged(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.Exchange
-    def hasBucketedScan(p: SparkPlan): Boolean =
-      p.toString.contains("Bucketed: true")
-    def walk(p: SparkPlan): Boolean = p match {
-      case e: Exchange if hasBucketedScan(e) => true
-      case other => other.children.exists(walk)
-    }
-    assert(hasBucketedScan(df.queryExecution.executedPlan),
-      s"no bucketed scan in plan:\n${df.queryExecution.executedPlan}")
-    walk(df.queryExecution.executedPlan)
   }
 }

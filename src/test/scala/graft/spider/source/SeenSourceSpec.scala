@@ -3,9 +3,11 @@ package graft.spider.source
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.spider.PlanShapes.{exchangesAbove, finalPlan, storagePartitioned, withConfs}
 import graft.spider.SparkTestBase
 
 /** The DSv2 bucketed seen reader: correct rows, pruned columns, and — the
@@ -50,7 +52,7 @@ class SeenSourceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("storage-partitioned join: no Exchange above the seen scan, results exact") {
-    withSpj {
+    withConfs(storagePartitioned: _*) {
       val seen = loadSeen().select("seen_bucket", "url_hash")
       // candidate side: half hits, half misses
       val cand = spark.range(0, 2000)
@@ -64,35 +66,10 @@ class SeenSourceSpec extends AnyFunSuite with SparkTestBase {
       // partitioning — no Exchange between the scan and the join
       assert(plan.contains("BatchScan"), s"expected a v2 BatchScan:\n$plan")
       val scanSide = plan.linesIterator.filter(_.contains("BatchScan")).mkString
-      assert(!seenSideExchanged(joined), s"seen side re-shuffled:\n$plan\n$scanSide")
+      assert(exchangesAbove(finalPlan(joined))(_.isInstanceOf[BatchScanExec]).isEmpty,
+        s"seen side re-shuffled:\n$plan\n$scanSide")
 
       assert(joined.count() == 1000L)
-    }
-  }
-
-  /** Walk the physical plan: true if any Exchange sits above the v2 scan. */
-  private def seenSideExchanged(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.Exchange
-    def hasScan(p: SparkPlan): Boolean =
-      p.toString.contains("BatchScan")
-    def walk(p: SparkPlan): Boolean = p match {
-      case e: Exchange if hasScan(e) => true
-      case other => other.children.exists(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-  }
-
-  private def withSpj[A](f: => A): A = {
-    val pairs = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true")
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

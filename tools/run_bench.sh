@@ -25,11 +25,13 @@ mkdir -p "$GRAFT_LOCAL_DIR" "$GRAFT_STATE_DIR"
 # timed region). Without it the JVM grows into the heap mid-run and gVisor
 # demand-paging shows up as 30-300 s "environmental stalls" concentrated in
 # the first memory-heavy round (diagnosed round 2: the classic r3 stall).
+# The heap defaults to half the machine's memory; SPARK_DRIVER_MEM overrides.
 # GRAFT_CLASSES: frozen classes snapshot for long campaigns, so concurrent
 # sbt compiles can't churn class files under a running bench JVM.
+HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g) "g"}' /proc/meminfo)}
 exec java $ADD_OPENS \
-  -Xms"${SPARK_DRIVER_MEM:-100g}" \
-  -Xmx"${SPARK_DRIVER_MEM:-100g}" \
+  -Xms"$HEAP" \
+  -Xmx"$HEAP" \
   -XX:+AlwaysPreTouch \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \

@@ -1,12 +1,13 @@
 #!/bin/bash
 # Standalone-CLUSTER scaling pair, SEQUENTIAL levels (round 5, second design).
 #
-# The concurrent design (run_cluster_pair.sh) submits both levels at once so
-# they sample the same machine phase — but on one box the two drivers + 20
-# executor cores contend for tmpfs bandwidth and the scheduler, and the
-# measured pair C1-C4 efficiencies (0.23-0.34) were dominated by that mutual
-# interference plus a per-round serial floor that rep=100 rounds are too
-# short to amortize. This script removes both confounds:
+# The discarded concurrent design (receipts in BENCH/BASELINE.md r5) submitted
+# both levels at once so they sampled the same machine phase — but on one box
+# the two drivers + 20 executor cores contend for tmpfs bandwidth and the
+# scheduler, and the measured pair C1-C4 efficiencies (0.23-0.34) were
+# dominated by that mutual interference plus a per-round serial floor that
+# rep=100 rounds are too short to amortize. This script removes both
+# confounds:
 #
 #   - levels run one at a time (full box for each), order alternating by
 #     pair so a machine-phase drift cannot systematically favor one level

@@ -24,10 +24,6 @@ NOISE=${7:-17000}
 SEEDS=${8:-400}
 mkdir -p "$OUT"
 
-# One JVM at a time gets the whole box; cap heap well under RAM so corpus
-# cache + tmpfs shuffle state never page.
-export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-60g}
-
 # Shared bucketed corpus (CorpusStore): built ONCE at full parallelism, then
 # every run at every level opens it read-only — identical input bytes across
 # the whole campaign and no per-run single-threaded synthesis at local[1].
