@@ -32,8 +32,9 @@ object CrawlDriver {
   private def sketchParamsOf(cfg: CrawlConfig): SketchParams =
     SketchParams(cfg.seenBuckets, cfg.bloomShards, cfg.bloomExpectedItems, cfg.bloomFpp)
 
-  private def perShard(cfg: CrawlConfig): Long =
-    math.max(1024L, cfg.bloomExpectedItems / cfg.bloomShards)
+  /** The sharded seen Bloom over `urls`' url_hash column. */
+  private[spider] def bloomOf(urls: DataFrame, cfg: CrawlConfig): Array[Byte] =
+    urls.agg(CrawlEngine.seenBloomAgg(col("url_hash"), cfg)).head().getAs[Array[Byte]](0)
 
   /** Run (or resume) a crawl; returns the catalog positioned at cfg.rounds. */
   def run(
@@ -70,15 +71,15 @@ object CrawlDriver {
     require(cfg.hostRankFromRound == 0 || cfg.expireKeepLast == 0,
       "hostRankFromRound does not compose with snapshot expiration " +
         "(expired rounds drop the hostedges manifests the rank re-reads on resume)")
-    // storage-partitioned join over the DSv2 seen reader: group by the
-    // reported bucket partitioning and allow shuffling the (small)
-    // candidate side into it. Session-global planner settings — saved here
-    // and restored in the finally below so the crawl does not leak them
-    // into the caller's unrelated queries.
+    // storage-partitioned classic seen join over the DSv2 seen reader:
+    // group by the reported bucket partitioning and allow shuffling the
+    // (small) candidate side into it. Session-global planner settings —
+    // saved here and restored in the finally below so the crawl does not
+    // leak them into the caller's unrelated queries.
     val bucketingKeys = Seq("spark.sql.sources.v2.bucketing.enabled",
       "spark.sql.sources.v2.bucketing.shuffle.enabled")
     val priorBucketing = bucketingKeys.map(k => k -> spark.conf.getOption(k))
-    if (cfg.seenDsv2) bucketingKeys.foreach(spark.conf.set(_, "true"))
+    bucketingKeys.foreach(spark.conf.set(_, "true"))
     try {
     val robotsDf = robots.toDF()
     // a run that fails frees this cache unless the caller had it cached
@@ -103,33 +104,23 @@ object CrawlDriver {
         val bloomCompatible = stored.bloomShards == cfg.bloomShards &&
           stored.bloomExpectedItems == cfg.bloomExpectedItems &&
           stored.bloomFpp == cfg.bloomFpp
-        val blob =
-          if (!cfg.bloomPrefilter) None
-          else (catalog.readBloom(r), bloomCompatible) match {
-            case (b @ Some(_), true) => b
-            case _ => // params changed, or the prior run had the sketch off
-              System.err.println(s"[crawl] rebuilding seen Bloom from catalog " +
-                s"(stored params $stored incompatible with cfg)")
-              Some(catalog.readSeen(r)
-                .agg(Sketches.shardedBloomAgg(col("url_hash"), cfg.bloomShards,
-                  perShard(cfg), cfg.bloomFpp))
-                .head().getAs[Array[Byte]](0))
-          }
+        val blob = (catalog.readBloom(r), bloomCompatible) match {
+          case (Some(b), true) => b
+          case _ => // params changed or no stored Bloom
+            System.err.println(s"[crawl] rebuilding seen Bloom from catalog " +
+              s"(stored params $stored, cfg params $params)")
+            bloomOf(catalog.readSeen(r), cfg)
+        }
         (r, blob)
       case None =>
         val seedsDf = seeds.toDF().persist()
         val nSeeds = seedsDf.count()
-        val blob =
-          if (!cfg.bloomPrefilter) None
-          else Some(seedsDf.agg(
-            Sketches.shardedBloomAgg(col("url_hash"), cfg.bloomShards,
-              perShard(cfg), cfg.bloomFpp))
-            .head().getAs[Array[Byte]](0))
+        val blob = bloomOf(seedsDf, cfg)
         import spark.implicits._
         val emptyHostState = spark.emptyDataset[HostState].toDF()
         val seenDelta = seedsDf.select(col("url_hash"), col("url"))
           .withColumn("seen_bucket", CrawlEngine.seenBucketCol(col("url_hash"), cfg.seenBuckets))
-        catalog.commitRound(0, seedsDf, seenDelta, emptyHostState, None, blob, params,
+        catalog.commitRound(0, seedsDf, seenDelta, emptyHostState, None, Some(blob), params,
           RoundCounters(0, 0, 0, 0, 0, 0, 0, nSeeds, 0, nSeeds, nSeeds))
         seedsDf.unpersist()
         (0, blob)
@@ -139,19 +130,12 @@ object CrawlDriver {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
 
-    def mergeBloom(prev: Option[Array[Byte]], delta: Option[Array[Byte]]): Option[Array[Byte]] =
-      (prev, delta) match {
-        case (Some(p), Some(d)) => Some(Sketches.mergeShardedBlobs(p, d))
-        case (None, d @ Some(_)) => d
-        case (p, None)           => p
-      }
-
     // Cross-round state rides a Future chain: each round's discovery
     // aggregate (candN/enqueuedN/Bloom delta) completes during the NEXT
     // round's fetch phase; the chain assembles exact manifest counters, the
     // merged Bloom, and the cumulative seen-row count without any of them
     // blocking a round boundary. Seed values are exact (manifest metadata).
-    case class Chain(bloom: Option[Array[Byte]], seenRows: Long, frontierOut: Long)
+    case class Chain(bloom: Array[Byte], seenRows: Long, frontierOut: Long)
     val seenRows0: Long = catalog.seenRowsThrough(startRound)
     val frontierOut0: Long =
       catalog.manifest(startRound).get("tables").get("frontier").get("rows").asLong()
@@ -166,7 +150,7 @@ object CrawlDriver {
     // round), so frames live for two rounds after their own.
     case class Pend(round: Int, pc: CrawlCatalog#PendingCommit,
         out: CrawlEngine.RoundOutput,
-        roundF: Future[(RoundCounters, Option[Array[Byte]], Chain)])
+        roundF: Future[(RoundCounters, Array[Byte], Chain)])
     var pending: Option[Pend] = None
     var retired: Option[CrawlEngine.RoundOutput] = None
     // the newest round output: pending, retired, or (when the pending
@@ -194,7 +178,7 @@ object CrawlDriver {
           // rediscovered every round) — the rank is over the edge SET
           val edges = catalog.readHostEdges(cfg.hostRankFromRound).distinct()
           val ranked = graft.datapipe.LinkRank.hostRank(
-            edges, "src_host", "dst_host", cfg.hostRankIters).persist()
+            edges, "src_host", "dst_host", CrawlConfig.hostRankIters).persist()
           val n = ranked.count() // = |vertices|: hostRank emits every vertex
           val boost = ranked.select(col("host"),
             graft.datapipe.LinkRank.rankTier(col("rank"), n).as("boost"))
@@ -204,7 +188,7 @@ object CrawlDriver {
           val bn = boost.count()
           hostBoostCkpt = Some(boost)
           hostBoostCache = Some(
-            if (bn <= cfg.cutoffBroadcastMax) broadcast(boost) else boost)
+            if (bn <= CrawlConfig.cutoffBroadcastMax) broadcast(boost) else boost)
           if (cfg.verbose) System.err.println(
             s"[crawl] hostRank signal ready: $n hosts ranked, $bn boosted")
         }
@@ -216,8 +200,9 @@ object CrawlDriver {
       // localCheckpoint-backed frames are NOT in the CacheManager, so the
       // Dataset.unpersist above is a no-op for them — free their blocks
       // explicitly instead of waiting out the ContextCleaner's GC pace.
-      // (May log a few benign "non-existent accumulator" task-end messages:
-      // dropped metric updates for already-finished overlapping jobs.)
+      // (A round may log "non-existent accumulator" task-end errors: the
+      // final stage of its newCkpt = admitted.localCheckpoint(false) reports
+      // SQL metrics after that checkpoint's execution is gone.)
       out.ckptRdds.foreach(_.unpersist(blocking = false))
       out.broadcasts.foreach(_.destroy())
     }
@@ -255,7 +240,7 @@ object CrawlDriver {
       def seenInput(committedRound: Int, extra: Option[DataFrame]) =
         CrawlEngine.SeenInput(
           catalog.readSeenBucketed(committedRound),
-          if (cfg.seenDsv2) Some(catalog.readSeenV2(committedRound, cfg.seenBuckets)) else None,
+          catalog.readSeenV2(committedRound, cfg.seenBuckets),
           extra)
       val (frontier, seen, hostState, frontierInBound, prevLinksN, prebuilt) = pending match {
         case Some(p) =>
@@ -298,11 +283,11 @@ object CrawlDriver {
 
       // Exact counters + incremental sketch: bloom(r) = bloom(r-1) ⊎ delta
       // per shard; frontier_in(r) = frontier_out(r-1) from the chain.
-      val roundF: Future[(RoundCounters, Option[Array[Byte]], Chain)] = for {
+      val roundF: Future[(RoundCounters, Array[Byte], Chain)] = for {
         prev <- prevF
         (candN, enqueuedN, delta) <- out.rawStatsF
       } yield {
-        val merged = mergeBloom(prev.bloom, delta)
+        val merged = delta.fold(prev.bloom)(Sketches.mergeShardedBlobs(prev.bloom, _))
         val frontierOut = (out.eligibleN - out.dequeuedN) + enqueuedN + out.recrawlN
         val counters = RoundCounters(r, prev.frontierOut,
           prev.frontierOut - out.eligibleN, out.dequeuedN, out.fetchedN,
@@ -317,7 +302,7 @@ object CrawlDriver {
       // then retire frames two rounds back.
       pending.foreach { p =>
         val (counters, bloomAfter, _) = Await.result(p.roundF, Duration.Inf)
-        p.pc.finalizeCommit(bloomAfter, params, counters)
+        p.pc.finalizeCommit(Some(bloomAfter), params, counters)
         retired.foreach(cleanup)
         retired = Some(p.out)
       }
@@ -327,12 +312,12 @@ object CrawlDriver {
       // round r-1; it folds this round's delta by chaining off its staged
       // write and drains on a pool thread like the other table writes.
       if (cfg.compactSeenEvery > 0 && r % cfg.compactSeenEvery == 0)
-        pc.stageSeenCompaction(cfg.compactMaxFilesPerBucket)
+        pc.stageSeenCompaction(CrawlConfig.compactMaxFilesPerBucket)
       if (r < cfg.rounds) {
         pending = Some(Pend(r, pc, out, roundF))
       } else {
         val (counters, bloomAfter, _) = Await.result(roundF, Duration.Inf)
-        pc.finalizeCommit(bloomAfter, params, counters)
+        pc.finalizeCommit(Some(bloomAfter), params, counters)
         pending = None
         retired.foreach(cleanup)
         retired = Some(out)

@@ -1,7 +1,7 @@
 package graft.spider
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -101,24 +101,18 @@ object CrawlEngine {
     *   - `committed`: the committed history as vectorized parquet scans (the
     *     flip path's fastest scan-and-semi-join input);
     *   - `committedV2`: the same files through the DSv2 bucket-reporting
-    *     reader ([[graft.spider.source.SeenSource]]) when `cfg.seenDsv2` —
-    *     the classic fallback joins THIS side storage-partitioned, no
-    *     exchange of the history;
+    *     reader ([[graft.spider.source.SeenSource]]) — the classic path
+    *     joins THIS side storage-partitioned, no exchange of the history;
     *   - `extra`: the previous round's not-yet-committed delta when commits
     *     are pipelined (an in-memory checkpoint frame — file-based readers
     *     cannot see it, so the classic path joins it separately; it is
     *     round-sized, so that join is cheap at any scale). */
   case class SeenInput(
       committed: DataFrame,
-      committedV2: Option[DataFrame],
+      committedV2: DataFrame,
       extra: Option[DataFrame]) {
     /** Everything, vectorized-parquet + in-memory — the flip path's input. */
     def scanAll: DataFrame = extra.foldLeft(committed)(_.unionByName(_))
-  }
-
-  object SeenInput {
-    /** Plain single-frame input (tests/tools). */
-    def plain(df: DataFrame): SeenInput = SeenInput(df, None, None)
   }
 
   private val frontierCols =
@@ -197,7 +191,8 @@ object CrawlEngine {
       .groupBy("host").agg(min("priority").as("prio_cutoff"))
     // hosts ≤ frontier rows, so the frontier bound caps the cutoff table
     // size without waiting for any count
-    val cutoffs = if (frontierInBound <= cfg.cutoffBroadcastMax) broadcast(cutoffs0) else cutoffs0
+    val cutoffs =
+      if (frontierInBound <= CrawlConfig.cutoffBroadcastMax) broadcast(cutoffs0) else cutoffs0
     val withCut = eligible.join(cutoffs, Seq("host"))
 
     val ranked = rankPerHost(
@@ -261,7 +256,7 @@ object CrawlEngine {
         * completes when the PREVIOUS round's discovery aggregate lands;
         * awaited only at this round's discovery stage, so the previous
         * aggregate overlaps this round's dequeue + fetch phases. */
-      prevStats: scala.concurrent.Future[(Option[Array[Byte]], Long)],
+      prevStats: scala.concurrent.Future[(Array[Byte], Long)],
       /** |frontier| upper bound (exact when read from a manifest) — strategy
         * decisions only; exact counters are assembled by CrawlDriver. */
       frontierInBound: Long,
@@ -301,9 +296,6 @@ object CrawlEngine {
         * this side is strategy-ready as passed. */
       hostBoost: Option[DataFrame] = None): RoundOutput = {
 
-    val t0 = System.nanoTime()
-    if (cfg.verbose) System.err.println(s"[round $round] start")
-
     // ---- 1 dequeue: robots gate + per-host politeness budget top-k ----
     // (O1/W1: the window's hash exchange on host IS the explicit host
     // partitioning; trailing sort keys make the order total ⇒ replayable.)
@@ -325,8 +317,7 @@ object CrawlEngine {
     import scala.concurrent.ExecutionContext.Implicits.global
     val hbRowF = Future {
       hb.groupBy("host").agg(sum("n").as("tot"), first("budget").as("b"))
-        .agg(count(lit(1)),
-          coalesce(sum(least(col("tot"), col("b"))), lit(0L)),
+        .agg(coalesce(sum(least(col("tot"), col("b"))), lit(0L)),
           coalesce(sum("tot"), lit(0L)))
         .head()
     }
@@ -343,24 +334,19 @@ object CrawlEngine {
     // probe plans, and compiling the new-entries checkpoint (toRdd) — runs
     // on a pool thread WHILE the fetch job executes below. Measured 2-3 s
     // per round of tail time in round 2; now it hides behind the 4-20 s
-    // fetch. No job runs inside the future (localCheckpoint(false) is
-    // lazy), so executor slots stay with the fetch.
-    val scoped = cfg.scopeHosts match {
-      case Some(hs) => (df: DataFrame) => df.filter(col("host").isin(hs.toSeq: _*))
-      case None     => (df: DataFrame) => df
-    }
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // fetch. The future is not job-free: under AQE, building newCkpt
+    // (localCheckpoint(false)) runs the checkpoint's shuffle stages as jobs
+    // on this pool thread, and they compete with the fetch for executor
+    // slots.
     val discoveryF = Future {
-      val cand = scoped(
-        extracted
-          .select(col("warc_ts").as("parent_ts"), explode(col("outlinks")).as("raw_url"))
-          .withColumn("url", url_canonicalize(col("raw_url")))
-          // E2 via the shared core (UrlCanonical.host), NOT parse_url: the
-          // built-in nulls out URLs java.net.URI rejects, which would drop
-          // candidates the oracle keeps (engine≡oracle would diverge).
-          .withColumn("host", url_host(col("url")))
-          .filter(col("host").isNotNull))
+      val cand = extracted
+        .select(col("warc_ts").as("parent_ts"), explode(col("outlinks")).as("raw_url"))
+        .withColumn("url", url_canonicalize(col("raw_url")))
+        // E2 via the shared core (UrlCanonical.host), NOT parse_url: the
+        // built-in nulls out URLs java.net.URI rejects, which would drop
+        // candidates the oracle keeps (engine≡oracle would diverge).
+        .withColumn("host", url_host(col("url")))
+        .filter(col("host").isNotNull)
         .groupBy("url")
         .agg(min(col("parent_ts")).as("warc_ts"), min(col("host")).as("host"))
         .withColumn("url_hash", xxhash64(col("url")))
@@ -371,24 +357,19 @@ object CrawlEngine {
       // prefilter (exact semantics: a stale filter could mark a
       // just-enqueued URL "definitely new").
       val (bloomBytes, seenRows) = Await.result(prevStats, Duration.Inf)
-      if (cfg.verbose) System.err.println(
-        s"[round $round] prev discovery stats ready @${(System.nanoTime() - t0) / 1e9}")
 
       // Sharded Bloom arrives via SparkContext.broadcast — tasks pull the
       // blocks once per executor; the expression tree stays tiny at any
       // filter size (round 1 shipped the filter as a literal: task binaries
       // ballooned and a driver-held monolith cannot exist at 10^10 URLs).
-      val bloomBc: Option[Broadcast[Array[Array[Byte]]]] =
-        if (cfg.bloomPrefilter)
-          bloomBytes.map(b => spark.sparkContext.broadcast(Sketches.shardedFrom(b)))
-        else None
+      val bloomBc = spark.sparkContext.broadcast(Sketches.shardedFrom(bloomBytes))
 
       // J3 strategy, cost-based with no count job on the path: prevLinksN
       // (last round's links, a proxy for this round's candidate volume) vs
       // seenRows (manifest-exact). Flip — scan seen, broadcast candidate
       // keys — only in its winning regime, seen ≫ candidates; otherwise the
       // fully-distributed classic join (storage-partitioned over DSv2).
-      val flip = prevLinksN <= cfg.seenFlipMax &&
+      val flip = prevLinksN <= CrawlConfig.seenFlipMax &&
         seenRows.toDouble >= cfg.seenFlipRatio * math.max(1L, prevLinksN)
       val flagged = flagAgainstSeen(cand, seen, bloomBc, cfg, flip)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -418,15 +399,13 @@ object CrawlEngine {
       val admitted =
         if (cfg.maxNewPerHost > 0) capPerHost(newEntries, cfg) else newEntries
 
-      // Lazy local checkpoint (see hostStateNextP): cached blocks +
-      // truncated plan, materialized by whichever consumer runs first (the
-      // staged write racing the pipelined next round's first job). The
-      // expensive part HERE is the toRdd plan compile — the reason this
-      // future exists.
+      // Local checkpoint (see hostStateNextP): cached blocks + truncated
+      // plan. Its toRdd compiles the plan here and, under AQE, runs the
+      // shuffle stages below it as jobs; the final stage is materialized by
+      // whichever consumer runs first (the staged write racing the
+      // pipelined next round's first job).
       val newCkpt = admitted.localCheckpoint(false)
-      if (cfg.verbose) System.err.println(
-        s"[round $round] ckpt new compiled @${(System.nanoTime() - t0) / 1e9} (flip=$flip)")
-      (cand, bloomBc, flagged, newCkpt, flip)
+      (cand, bloomBc, flagged, newCkpt)
     }
 
     // A round that throws returns no RoundOutput for the driver to free, so
@@ -435,19 +414,13 @@ object CrawlEngine {
     // everything this round cached.
     var hostStateCkpt: Option[DataFrame] = None
     try {
-    if (cfg.verbose) System.err.println(
-      s"[round $round] fetch submit @${(System.nanoTime() - t0) / 1e9}")
     val s2 = extracted.agg(count(lit(1)), coalesce(sum("n_links"), lit(0L))).head()
     val fetchedN = s2.getLong(0)
     val linksN = s2.getLong(1)
-    if (cfg.verbose) System.err.println(s"[round $round] fetch+extract done: $fetchedN @${(System.nanoTime() - t0) / 1e9}")
     // the stats future has long since finished (it raced the fetch job)
     val hbRow = Await.result(hbRowF, Duration.Inf)
-    val hostsN = hbRow.getLong(0)
-    val dequeuedN = hbRow.getLong(1)
-    val eligibleN = hbRow.getLong(2)
-    if (cfg.verbose) System.err.println(
-      s"[round $round] sched stats: hosts=$hostsN dequeue=$dequeuedN @${(System.nanoTime() - t0) / 1e9}")
+    val dequeuedN = hbRow.getLong(0)
+    val eligibleN = hbRow.getLong(1)
 
     val crawledDelta = extracted.select(
       col("url"), col("url_hash"), col("host"), lit(round).as("round"),
@@ -484,7 +457,7 @@ object CrawlEngine {
     stage("hoststate", hostStateNextP)
     // hostRank signal source (cfg.hostRankFromRound): this round's distinct
     // host-level outlink pairs — canonical/host semantics identical to the
-    // discovery path (and the oracle), but NOT scope- or seen-filtered: the
+    // discovery path (and the oracle), but NOT seen-filtered: the
     // link graph measures endorsement, not crawl admission. Host-level
     // cardinality (≤ hosts²-bounded, in practice ≈ pages' host fan-out), so
     // the distinct is cheap next to the discovery dedup. Only rounds that
@@ -520,7 +493,7 @@ object CrawlEngine {
       case Some(rc) => base.unionByName(rc.select(
         col("url"), col("url_hash"), col("host"),
         xxhash64(col("host")).as("host_hash"),
-        lit(cfg.recrawlPriority).as("priority"),
+        lit(CrawlConfig.recrawlPriority).as("priority"),
         lit(round).as("discovered_round"),
         col("fetch_ts").as("warc_ts")))
       case None => base
@@ -529,7 +502,7 @@ object CrawlEngine {
     val nextDequeueF: Future[Option[DequeueFrames]] =
       if (round >= cfg.rounds) Future.successful(None)
       else for {
-        (_, _, _, newCkpt, _) <- discoveryF
+        (_, _, _, newCkpt) <- discoveryF
         residualCkpt <- residualCkptF
       } yield {
         val fn = withRecrawl(residualCkpt.unionByName(newCkpt))
@@ -543,28 +516,19 @@ object CrawlEngine {
     // fetch job ran — so the round tail only assembles frames and stages
     // writes; the union itself stays un-checkpointed (depth-1 over leaves,
     // lineage bounded).
-    val (cand, bloomBc, flagged, newCkpt, flip) = Await.result(discoveryF, Duration.Inf)
+    val (cand, bloomBc, flagged, newCkpt) = Await.result(discoveryF, Duration.Inf)
     val residualCkpt = Await.result(residualCkptF, Duration.Inf)
     val frontierNext = withRecrawl(residualCkpt.unionByName(newCkpt))
     val seenDelta = newCkpt.select(col("url_hash"), col("url"))
       .withColumn("seen_bucket", seenBucketCol(col("url_hash"), cfg.seenBuckets))
     stage("frontier", frontierNext)
     stage("seen", seenDelta)
-    if (cfg.verbose) System.err.println(s"[round $round] staged @${(System.nanoTime() - t0) / 1e9}")
 
     // ONE job: candidate count + enqueued count + the round's Bloom delta
     // (sharded, over the new urls only — nulls are skipped by the agg).
     // Launched LAST, as a Future: its results feed the manifest counters and
     // the NEXT round's Bloom, neither of which gates this round's dataflow,
     // so the aggregate overlaps the next round's dequeue + fetch phases.
-    val perShard = math.max(1024L, cfg.bloomExpectedItems / cfg.bloomShards)
-    val baseAggs = Seq(
-      count(lit(1)),
-      sum(when(col("is_new"), 1L).otherwise(0L)))
-    val aggs = baseAggs ++ (if (cfg.bloomPrefilter)
-      Seq(Sketches.shardedBloomAgg(when(col("is_new"), col("url_hash")),
-        cfg.bloomShards, perShard, cfg.bloomFpp))
-    else Nil)
     val rawStatsF = Future {
       if (cfg.maxNewPerHost > 0) {
         // Capped admission: enqueuedN and the Bloom delta must cover the
@@ -574,27 +538,15 @@ object CrawlEngine {
         // this path pays a second small job over the admitted checkpoint —
         // only when the feature is on.
         val candN = flagged.agg(count(lit(1))).head().getLong(0)
-        val admAggs = Seq(count(lit(1))) ++ (if (cfg.bloomPrefilter)
-          Seq(Sketches.shardedBloomAgg(col("url_hash"),
-            cfg.bloomShards, perShard, cfg.bloomFpp))
-        else Nil)
-        val s4 = newCkpt.agg(admAggs.head, admAggs.tail: _*).head()
+        val s4 = newCkpt.agg(count(lit(1)), seenBloomAgg(col("url_hash"), cfg)).head()
         val enqueuedN = s4.getLong(0)
-        val bloomDelta =
-          if (cfg.bloomPrefilter && enqueuedN > 0) Some(s4.getAs[Array[Byte]](1)) else None
-        if (cfg.verbose) System.err.println(
-          s"[round $round] discover done: cand=$candN new=$enqueuedN (capped) " +
-            s"flip=$flip @${(System.nanoTime() - t0) / 1e9}")
-        (candN, enqueuedN, bloomDelta)
+        (candN, enqueuedN, if (enqueuedN > 0) Some(s4.getAs[Array[Byte]](1)) else None)
       } else {
-        val s3 = flagged.agg(aggs.head, aggs.tail: _*).head()
+        val s3 = flagged.agg(count(lit(1)), sum(when(col("is_new"), 1L).otherwise(0L)),
+          seenBloomAgg(when(col("is_new"), col("url_hash")), cfg)).head()
         val candN = s3.getLong(0)
         val enqueuedN = if (s3.isNullAt(1)) 0L else s3.getLong(1)
-        val bloomDelta =
-          if (cfg.bloomPrefilter && enqueuedN > 0) Some(s3.getAs[Array[Byte]](2)) else None
-        if (cfg.verbose) System.err.println(
-          s"[round $round] discover done: cand=$candN new=$enqueuedN flip=$flip @${(System.nanoTime() - t0) / 1e9}")
-        (candN, enqueuedN, bloomDelta)
+        (candN, enqueuedN, if (enqueuedN > 0) Some(s3.getAs[Array[Byte]](2)) else None)
       }
     }
 
@@ -602,19 +554,25 @@ object CrawlEngine {
       .flatMap(GraftColumnBridge.checkpointRdd)
     RoundOutput(round, eligibleN, dequeuedN, fetchedN, linksN, recrawlN, rawStatsF,
       dq.cached ++ Seq(cand, flagged, hostStateNextP, frontierNext, seenDelta),
-      ckptRdds, bloomBc.toSeq, frontierNext, seenDelta, hostStateNextP,
+      ckptRdds, Seq(bloomBc), frontierNext, seenDelta, hostStateNextP,
       nextDequeueF)
     } catch {
       case NonFatal(e) =>
         Seq(hbRowF, residualCkptF, discoveryF).foreach(Await.ready(_, Duration.Inf))
         (dq.cached ++ residualCkptF.value.flatMap(_.toOption) ++ hostStateCkpt).foreach(release)
-        discoveryF.value.flatMap(_.toOption).foreach { case (cand, bloomBc, flagged, newCkpt, _) =>
+        discoveryF.value.flatMap(_.toOption).foreach { case (cand, bloomBc, flagged, newCkpt) =>
           Seq(cand, flagged, newCkpt).foreach(release)
-          bloomBc.foreach(_.destroy())
+          bloomBc.destroy()
         }
         throw e
     }
   }
+
+  /** The sharded seen-Bloom aggregate over `urlHash` (nulls skipped) under
+    * cfg's sketch params. */
+  private[spider] def seenBloomAgg(urlHash: Column, cfg: CrawlConfig): Column =
+    Sketches.shardedBloomAgg(urlHash, cfg.bloomShards,
+      math.max(1024L, cfg.bloomExpectedItems / cfg.bloomShards), cfg.bloomFpp)
 
   /** Free a frame's cached blocks, `persist`ed or `localCheckpoint`ed
     * (`Dataset.unpersist` is a no-op on the latter). */
@@ -633,67 +591,53 @@ object CrawlEngine {
     * set (bloom-absent candidates are provably unseen and skip the probe
     * entirely — a Bloom filter has no false negatives).
     *
-    * Fallback (giant candidate rounds): join on (seen_bucket, url_hash).
-    * With the DSv2 committed side ([[graft.spider.source.SeenSource]]) the
-    * join is STORAGE-PARTITIONED — the history's reported bucket grouping
-    * satisfies the join's distribution, only the round-sized candidate side
-    * shuffles (into the bucket grouping), and the pipelined in-flight delta
-    * (also round-sized) joins separately. Without DSv2 the fallback pays
-    * the classic full-history exchange.
+    * Classic (giant candidate rounds): join the maybe-seen candidates on
+    * (seen_bucket, url_hash) against the DSv2 committed side
+    * ([[graft.spider.source.SeenSource]]). The join is
+    * STORAGE-PARTITIONED — the history's reported bucket grouping satisfies
+    * the join's distribution, only the round-sized candidate side shuffles
+    * (into the bucket grouping), and the pipelined in-flight delta (also
+    * round-sized) joins separately.
     */
   private[spider] def flagAgainstSeen(
       cand: DataFrame,
       seen: SeenInput,
-      bloomBc: Option[Broadcast[Array[Array[Byte]]]],
+      bloomBc: Broadcast[Array[Array[Byte]]],
       cfg: CrawlConfig,
       flip: Boolean): DataFrame = {
+    val maybeSeen = bloom_sharded_might_contain(bloomBc, col("url_hash"))
     val flagged0 =
       if (flip) {
         val seenKeys = seen.scanAll.select("url_hash", "seen_bucket")
-        val probe0 = bloomBc match {
-          case Some(bc) => cand.filter(bloom_sharded_might_contain(bc, col("url_hash")))
-          case None     => cand
-        }
-        val probeKeys = probe0.select(col("url_hash"))
+        val probeKeys = cand.filter(maybeSeen).select(col("url_hash"))
           .withColumn("seen_bucket", seenBucketCol(col("url_hash"), cfg.seenBuckets))
         val hits = seenKeys
           .join(broadcast(probeKeys), Seq("seen_bucket", "url_hash"), "left_semi")
           .select(col("url_hash")).withColumn("seen_hit", lit(true))
         cand.join(broadcast(hits), Seq("url_hash"), "left_outer")
       } else {
-        val committedKeys = seen.committedV2.getOrElse(seen.committed)
-          .select("seen_bucket", "url_hash")
-        def classicJoin(c: DataFrame): DataFrame = {
-          // shuffle_hash on the candidate side: build the round-sized hash
-          // table, STREAM the history — a sort-merge join would sort the
-          // whole seen history every round
-          val candB = c.withColumn("seen_bucket",
-            seenBucketCol(col("url_hash"), cfg.seenBuckets))
-            .hint("shuffle_hash")
-          val withC = candB.join(
-            committedKeys.withColumn("hit_c", lit(true)),
-            Seq("seen_bucket", "url_hash"), "left_outer")
-          val withAll = seen.extra match {
-            case Some(d) =>
-              // same (bucket, hash) keys so the exchange introduced for the
-              // committed join is reusable; the delta is round-sized.
-              withC.join(
-                d.select("seen_bucket", "url_hash").withColumn("hit_d", lit(true)),
-                Seq("seen_bucket", "url_hash"), "left_outer")
-                .withColumn("seen_hit", coalesce(col("hit_c"), col("hit_d")))
-                .drop("hit_c", "hit_d")
-            case None => withC.withColumnRenamed("hit_c", "seen_hit")
-          }
-          withAll.drop("seen_bucket")
+        // shuffle_hash on the candidate side: build the round-sized hash
+        // table, STREAM the history — a sort-merge join would sort the
+        // whole seen history every round
+        val candB = cand.filter(maybeSeen)
+          .withColumn("seen_bucket", seenBucketCol(col("url_hash"), cfg.seenBuckets))
+          .hint("shuffle_hash")
+        val withC = candB.join(
+          seen.committedV2.select("seen_bucket", "url_hash").withColumn("hit_c", lit(true)),
+          Seq("seen_bucket", "url_hash"), "left_outer")
+        val withAll = seen.extra match {
+          case Some(d) =>
+            // same (bucket, hash) keys so the exchange introduced for the
+            // committed join is reusable; the delta is round-sized.
+            withC.join(
+              d.select("seen_bucket", "url_hash").withColumn("hit_d", lit(true)),
+              Seq("seen_bucket", "url_hash"), "left_outer")
+              .withColumn("seen_hit", coalesce(col("hit_c"), col("hit_d")))
+              .drop("hit_c", "hit_d")
+          case None => withC.withColumnRenamed("hit_c", "seen_hit")
         }
-        bloomBc match {
-          case Some(bc) =>
-            val mc = bloom_sharded_might_contain(bc, col("url_hash"))
-            cand.filter(!mc).withColumn("seen_hit", lit(null).cast("boolean"))
-              .unionByName(classicJoin(cand.filter(mc)))
-          case None =>
-            classicJoin(cand)
-        }
+        cand.filter(!maybeSeen).withColumn("seen_hit", lit(null).cast("boolean"))
+          .unionByName(withAll.drop("seen_bucket"))
       }
     flagged0.withColumn("is_new", col("seen_hit").isNull).drop("seen_hit")
   }

@@ -103,10 +103,6 @@ object CrawlOracle {
   /** The sequential fetch-parse-extract loop. */
   def run(pages: Seq[OraclePage], seedList: Seq[Entry], cfg: CrawlConfig): Result = {
     val pageByUrl: Map[String, OraclePage] = pages.map(p => p.url -> p).toMap
-    val scope: String => Boolean = cfg.scopeHosts match {
-      case Some(hs) => hs.contains
-      case None     => Function.const(true)
-    }
     val seen = mutable.HashSet[Long](seedList.map(_.urlHash): _*)
     var frontier: Vector[Entry] = seedList.toVector
     val crawled = Vector.newBuilder[Crawled]
@@ -118,7 +114,7 @@ object CrawlOracle {
     val fetchedAtRound = mutable.HashMap[Int, Vector[Crawled]]()
     // hostRank priority signal (cfg.hostRankFromRound = K): host-level edge
     // SET accumulated over rounds 1..K (canonical/host semantics of the
-    // discovery path, NOT scope-filtered — endorsement, not admission);
+    // discovery path, NOT seen-filtered — endorsement, not admission);
     // ranked once after round K, boosting discoveries from round K+2 on
     // (the engine's commit-pipeline-depth stance).
     val hostEdges = mutable.HashSet[(String, String)]()
@@ -128,7 +124,7 @@ object CrawlOracle {
       val frontierIn = frontier.size.toLong
       var blocked = 0L; var dequeuedN = 0L; var fetchedN = 0L; var missingN = 0L
       var linksN = 0L
-      // all distinct in-scope canonical candidates this round (counter basis)
+      // all distinct canonical candidates this round (counter basis)
       val roundCandUrls = mutable.HashSet[String]()
       // unseen candidate url -> (hash, host, min parent warc_ts)
       val candidates = mutable.LinkedHashMap[String, (Long, String, Long)]()
@@ -165,7 +161,7 @@ object CrawlOracle {
                 if (lhost != null && cfg.hostRankFromRound > 0 &&
                     r <= cfg.hostRankFromRound)
                   hostEdges += ((host, lhost))
-                if (lhost != null && scope(lhost)) {
+                if (lhost != null) {
                   roundCandUrls += cu
                   if (!seen.contains(h)) candidates.get(cu) match {
                     case Some((hh, hst, ts)) =>
@@ -202,14 +198,14 @@ object CrawlOracle {
       val recrawl: Vector[Entry] =
         if (cfg.recrawlEvery > 0)
           fetchedAtRound.getOrElse(r + 1 - cfg.recrawlEvery, Vector.empty).map(c =>
-            Entry(c.url, c.urlHash, c.host, cfg.recrawlPriority, r, c.fetchTsMicros))
+            Entry(c.url, c.urlHash, c.host, CrawlConfig.recrawlPriority, r, c.fetchTsMicros))
         else Vector.empty
       frontier = residuals.result() ++ fresh ++ recrawl
       counters += RoundCounters(r, frontierIn, blocked, dequeuedN, fetchedN,
         missingN, linksN, candN, candN - fresh.size.toLong, fresh.size.toLong,
         frontier.size.toLong)
       if (cfg.hostRankFromRound > 0 && r == cfg.hostRankFromRound)
-        hostBoost = hostRankBoost(hostEdges.toSet, cfg.hostRankIters)
+        hostBoost = hostRankBoost(hostEdges.toSet, CrawlConfig.hostRankIters)
     }
 
     Result(

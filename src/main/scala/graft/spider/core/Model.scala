@@ -56,17 +56,16 @@ case class CrawlConfig(
     roundLenMs: Long = 4000L,
     nSeeds: Int = 10,
     seedPriority: Int = 100,
-    /** restrict crawl to these hosts; None = hosts present in the corpus */
-    scopeHosts: Option[Set[String]] = None,
     /** salt buckets per host of the two-phase dequeue ranking */
     saltFactor: Int = 16,
     /** salted two-phase dequeue ranking for mega-host skew (J4/W1) */
     twoPhaseDequeue: Boolean = false,
-    bloomPrefilter: Boolean = true,
     /** dequeued rows above this switch the fetch join from broadcast to
       * shuffled-hash (pages side pre-partitioned by url stays in place) */
     fetchBroadcastMax: Long = 100000L,
-    /** per-round phase timing to stderr */
+    /** one stderr line per committed round (compute and commit-drain
+      * seconds, fetched count; `tools/scaling_report.py` parses it) and one
+      * when the hostRank signal is ready */
     verbose: Boolean = false,
     bloomExpectedItems: Long = 1L << 20,
     bloomFpp: Double = 0.03,
@@ -81,12 +80,6 @@ case class CrawlConfig(
       * corpus (sandbox default 16; a 10^10-URL catalog wants 2^10+ so a
       * bucket stays executor-sized). */
     seenBuckets: Int = 16,
-    /** links-per-round bound under which the exact seen anti-join runs
-      * flipped: scan seen once (no shuffle of the history), semi-join it
-      * against the broadcast candidate keys, then anti-join the candidates
-      * against the (tiny) hit set. Above the bound fall back to the classic
-      * shuffled anti-join. */
-    seenFlipMax: Long = 2000000L,
     /** flip only when the seen history is at least this many times the
       * candidate bound — the flip's purpose is seen ≫ candidates (it trades
       * a driver-serial broadcast of the candidate keys for NOT shuffling
@@ -101,35 +94,17 @@ case class CrawlConfig(
       * Catalyst reuses it: the round still pays exactly one full-row host
       * exchange. */
     robotsBroadcastMax: Long = 5000000L,
-    /** hosts above this stop broadcasting the per-host priority cutoffs and
-      * shuffle-join them instead (the exchange is then reused by the dequeue
-      * window, which partitions by host anyway). */
-    cutoffBroadcastMax: Long = 1000000L,
-    /** Serve the committed seen history to the CLASSIC membership join
-      * through the DSv2 bucket-partitioning-reporting reader
-      * ([[graft.spider.source.SeenSource]]), making that join
-      * storage-partitioned (no exchange of the history even above
-      * `seenFlipMax`). The flip path keeps the vectorized parquet scan
-      * either way. */
-    seenDsv2: Boolean = true,
     /** Compact the seen history every K rounds (0 = off): round r ≡ 0 mod K
       * additionally commits `seen_base` = a complete bucketed base through
       * r, so the membership probe reads O(1 + rounds mod K) file sets
       * instead of one per round — at hundreds of rounds the probe plan's
       * branch count and the per-bucket small-file count stay bounded. The
       * compaction is INCREMENTAL (Iceberg bin-pack model): only buckets
-      * whose file count crossed `compactMaxFilesPerBucket` are rewritten;
-      * the rest carry forward by reference — compaction I/O per commit is
-      * O(touched buckets' rows), not O(full history). Pure layout: results
-      * are invariant (equivalence test pins compaction on ≡ off). */
+      * whose file count crossed `CrawlConfig.compactMaxFilesPerBucket` are
+      * rewritten; the rest carry forward by reference — compaction I/O per
+      * commit is O(touched buckets' rows), not O(full history). Pure layout:
+      * results are invariant (equivalence test pins compaction on ≡ off). */
     compactSeenEvery: Int = 8,
-    /** Per-bucket file-count threshold for the incremental compaction: a
-      * bucket accumulating this many files (its base file plus one delta
-      * file per round that touched it) is bin-packed back to one file; below
-      * it the bucket's files are carried into the new base by reference
-      * (hard link — no data I/O). Bounds every bucket's file count (probe
-      * cost) while sparing cold buckets the O(bucket-history) rewrite. */
-    compactMaxFilesPerBucket: Int = 4,
     /** After the crawl, expire snapshots older than the newest compaction at
       * or before `latest - expireKeepLast + 1` (0 = keep everything) — the
       * Iceberg `expire_snapshots` maintenance action. Crawled output and
@@ -160,18 +135,15 @@ case class CrawlConfig(
       * `crawled` table — keyed (url, round) — accumulates a version time
       * series per url). 0 = off (fetch-once semantics). Re-admission
       * BYPASSES the URL-seen gate by design (the seen set still blocks
-      * duplicate DISCOVERY); re-admitted entries carry `recrawlPriority`
-      * and compete for per-host budget like any frontier entry, so a
-      * starved re-crawl simply stays pending. Engine constraint: must be
+      * duplicate DISCOVERY); re-admitted entries carry
+      * `CrawlConfig.recrawlPriority` and compete for per-host budget like
+      * any frontier entry, so a starved re-crawl simply stays pending.
+      * Engine constraint: must be
       * ≥ 3 (the snapshot commits run one round deep, see
       * [[graft.spider.CrawlDriver]]) so the source round's manifest is
       * final when its crawl log is re-read; the oracle accepts any value
       * ≥ 1. */
     recrawlEvery: Int = 0,
-    /** Priority for re-admitted (timed re-crawl) frontier entries. Default =
-      * seed priority: tracked items re-crawl ahead of freshly discovered
-      * URLs, the reference's price-tracking stance. */
-    recrawlPriority: Int = 100,
     /** Link-graph frontier-priority signal (VERDICT r4 task #9): when K > 0,
       * rounds 1..K additionally commit a per-round `hostedges` table (the
       * round's distinct (src_host, dst_host) outlink pairs — host-level, so
@@ -194,8 +166,6 @@ case class CrawlConfig(
       * expiration (requires expireKeepLast == 0: expired rounds drop their
       * hostedges manifests). */
     hostRankFromRound: Int = 0,
-    /** Power iterations for the hostRank priority signal. */
-    hostRankIters: Int = 10,
     /** Crawl-trap guard: per round, at most this many NEWLY DISCOVERED urls
       * per host are admitted to the frontier (0 = unlimited). The classic
       * crawl hazard at 10^10-URL scale is an infinite URL space — calendar
@@ -213,6 +183,35 @@ case class CrawlConfig(
     maxNewPerHost: Int = 0)
 
 object CrawlConfig {
+
+  /** Links-per-round bound under which the exact seen anti-join runs
+    * flipped: scan seen once (no shuffle of the history), semi-join it
+    * against the broadcast candidate keys, then anti-join the candidates
+    * against the (tiny) hit set. Above the bound the classic join runs,
+    * storage-partitioned over the DSv2 seen reader. Sits at the crossover
+    * measured against an 8M-row history (BENCH/BASELINE.md r4). */
+  val seenFlipMax: Long = 2000000L
+
+  /** Hosts above this stop broadcasting the per-host priority cutoffs and
+    * shuffle-join them instead (the exchange is then reused by the dequeue
+    * window, which partitions by host anyway). */
+  val cutoffBroadcastMax: Long = 1000000L
+
+  /** Per-bucket file-count threshold for the incremental compaction: a
+    * bucket accumulating this many files (its base file plus one delta
+    * file per round that touched it) is bin-packed back to one file; below
+    * it the bucket's files are carried into the new base by reference
+    * (hard link — no data I/O). Bounds every bucket's file count (probe
+    * cost) while sparing cold buckets the O(bucket-history) rewrite. */
+  val compactMaxFilesPerBucket: Int = 4
+
+  /** Priority for re-admitted (timed re-crawl) frontier entries. Equal to
+    * the default seed priority: tracked items re-crawl ahead of freshly
+    * discovered URLs, the reference's price-tracking stance. */
+  val recrawlPriority: Int = 100
+
+  /** Power iterations for the hostRank priority signal. */
+  val hostRankIters: Int = 10
 
   /** Next power of two ≥ `x`, clamped to [lo, hi] (both powers of two). */
   private[core] def pow2Clamp(x: Long, lo: Int, hi: Int): Int = {

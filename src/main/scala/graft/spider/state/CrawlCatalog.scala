@@ -263,7 +263,6 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
 
-    private val verbose = sys.env.contains("GRAFT_COMMIT_VERBOSE")
     private val staged =
       scala.collection.concurrent.TrieMap[String, Future[(Long, Seq[(Int, Long)])]]()
     @volatile private var seenBase: Option[Future[(Long, Seq[(Int, Long)])]] = None
@@ -283,24 +282,13 @@ class CrawlCatalog(val root: String, spark: SparkSession) {
     def stageSeenCompaction(maxFilesPerBucket: Int): Unit = {
       val seenF = staged.getOrElse("seen",
         throw new IllegalStateException("stage the seen delta before compaction"))
-      seenBase = Some(seenF.map { _ => // this round's delta files have landed
-        val t = System.nanoTime()
-        val r = compactSeen(round, maxFilesPerBucket)
-        if (verbose) System.err.println(
-          f"[commit] seen_base(incremental) ${(System.nanoTime() - t) / 1e9}%.1fs")
-        r
-      })
+      // runs once this round's delta files have landed
+      seenBase = Some(seenF.map(_ => compactSeen(round, maxFilesPerBucket)))
     }
 
     def stage(table: String, df: DataFrame): Unit = {
       // Capture the session's active state: the write runs on a pool thread.
-      staged.put(table, Future {
-        val t = System.nanoTime()
-        val r = writeTable(table, round, df)
-        if (verbose) System.err.println(
-          f"[commit] $table ${(System.nanoTime() - t) / 1e9}%.1fs")
-        r
-      })
+      staged.put(table, Future(writeTable(table, round, df)))
     }
 
     /** Wait out every staged write, failed or not: for a commit the

@@ -116,14 +116,6 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     assert(engineHostTotals == oracleRes.hostFetched.filter(_._2 > 0))
   }
 
-  test("bloom prefilter off ≡ on (sketch never changes semantics)") {
-    val cfg = CrawlConfig(rounds = 2, bloomPrefilter = false)
-    val oracleRes = CrawlOracle.run(oraclePages, CrawlOracle.seeds(docs, cfg), cfg)
-    val catalog = engineCrawl(cfg)
-    assert(crawledTuples(catalog, 2) == oracleTuples(oracleRes))
-    assert(seenSet(catalog, 2) == oracleRes.seen)
-  }
-
   test("two-phase salted dequeue ≡ plain window (J4/W1 skew path is exact)") {
     val cfg = CrawlConfig(rounds = 3, twoPhaseDequeue = true, saltFactor = 4)
     val oracleRes = CrawlOracle.run(oraclePages, CrawlOracle.seeds(docs, cfg), cfg)
@@ -136,20 +128,16 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   test("flipped seen probe ≡ classic shuffled join (strategy never changes semantics)") {
     val oracleRes = CrawlOracle.run(oraclePages,
       CrawlOracle.seeds(docs, CrawlConfig(rounds = 3)), CrawlConfig(rounds = 3))
-    // ratio 0 forces the flip every round; MaxValue forces classic — which
-    // runs storage-partitioned over the DSv2 seen reader (seenDsv2 default)
-    // or as the plain shuffled join (seenDsv2 = false); all must agree.
+    // ratio 0 forces the flip every round; MaxValue forces the classic
+    // join, storage-partitioned over the DSv2 seen reader; both must agree.
     val flip = engineCrawl(CrawlConfig(rounds = 3, seenFlipRatio = 0.0))
     val classicV2 = engineCrawl(CrawlConfig(rounds = 3, seenFlipRatio = Double.MaxValue))
-    val classicPq = engineCrawl(CrawlConfig(rounds = 3, seenFlipRatio = Double.MaxValue,
-      seenDsv2 = false))
     assert(crawledTuples(flip, 3) == oracleTuples(oracleRes))
     assert(crawledTuples(classicV2, 3) == oracleTuples(oracleRes))
-    assert(crawledTuples(classicPq, 3) == oracleTuples(oracleRes))
     assert(seenSet(flip, 3) == oracleRes.seen)
     assert(seenSet(classicV2, 3) == oracleRes.seen)
-    assert(seenSet(classicPq, 3) == oracleRes.seen)
     (1 to 3).foreach { r =>
+      assert(flip.countersOf(r) == oracleRes.counters(r - 1), s"flip round $r counters")
       assert(classicV2.countersOf(r) == oracleRes.counters(r - 1), s"v2 round $r counters")
     }
   }
@@ -344,6 +332,26 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     assert(seenSet(resumed, 3) == seenSet(fresh, 3))
     assert(frontierSet(resumed, 3) == frontierSet(fresh, 3))
     (1 to 3).foreach(r => assert(resumed.countersOf(r) == fresh.countersOf(r)))
+  }
+
+  test("Bloom rebuilt on resume under new sketch params ≡ uninterrupted crawl " +
+      "under them; the manifest records the new params") {
+    val cfg = CrawlConfig(rounds = 4, bloomFpp = 0.01)
+    val stateDir = tmpState()
+    engineCrawl(CrawlConfig(rounds = 2), stateDir) // "killed" after round 2, fpp 0.03
+    val resumed = engineCrawl(cfg, stateDir)       // resumes at 3 with fpp 0.01
+    val full = engineCrawl(cfg)
+    assert(resumed.sketchParams(2).map(_.bloomFpp).contains(0.03))
+    assert(crawledTuples(resumed, 4) == crawledTuples(full, 4))
+    assert(seenSet(resumed, 4) == seenSet(full, 4))
+    assert(frontierSet(resumed, 4) == frontierSet(full, 4))
+    (1 to 4).foreach(r => assert(resumed.countersOf(r) == full.countersOf(r), s"round $r counters"))
+    // the rebuilt Bloom covers exactly the seen set, so it matches bit for bit
+    assert(java.util.Arrays.equals(resumed.readBloom(4).get, full.readBloom(4).get))
+    val params = resumed.manifest(4).get("sketch_params")
+    assert(params.get("bloom_fpp").asDouble() == 0.01)
+    assert(params.get("bloom_shards").asInt() == cfg.bloomShards)
+    assert(params.get("bloom_expected_items").asLong() == cfg.bloomExpectedItems)
   }
 
   test("partitioned robots gate ≡ broadcast gate (strategy fork is exact)") {

@@ -20,6 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.spider.PlanShapes._
 import graft.spider.core.{CrawlConfig, Hash64, RoundCounters}
+import graft.spider.sketch.Sketches
 import graft.spider.state.{CrawlCatalog, SketchParams}
 import graft.spider.synth.PagesSynth
 
@@ -58,13 +59,19 @@ class CrawlPlanShapeSpec extends AnyFunSuite with SparkTestBase {
     case _ => p.isInstanceOf[BroadcastExchangeExec]
   }
 
+  /** The sharded Bloom over the committed seen history, built as the engine
+    * builds it on resume. */
+  private lazy val bloom = spark.sparkContext.broadcast(
+    Sketches.shardedFrom(CrawlDriver.bloomOf(catalog.readSeen(1), cfg)))
+
   private def joinsOver(plan: SparkPlan)(isScan: SparkPlan => Boolean): Seq[BaseJoinExec] =
     nodes(plan).collect { case j: BaseJoinExec if nodes(j).exists(isScan) => j }
 
   test("flipped seen probe: seen scans read url_hash alone and are never shuffled") {
     withConfs(staticPlanning: _*) {
-      val plan = finalPlan(CrawlEngine.flagAgainstSeen(cand,
-        CrawlEngine.SeenInput.plain(catalog.readSeenBucketed(1)), None, cfg, flip = true))
+      val seen = CrawlEngine.SeenInput(catalog.readSeenBucketed(1),
+        catalog.readSeenV2(1, cfg.seenBuckets), None)
+      val plan = finalPlan(CrawlEngine.flagAgainstSeen(cand, seen, bloom, cfg, flip = true))
       val isSeenScan: SparkPlan => Boolean = {
         case s: FileSourceScanExec => s.relation.partitionSchema.fieldNames.contains("seen_bucket")
         case _ => false
@@ -91,8 +98,8 @@ class CrawlPlanShapeSpec extends AnyFunSuite with SparkTestBase {
   test("classic seen path: storage-partitioned, shuffled-hash join built on the candidates") {
     withConfs(staticPlanning ++ storagePartitioned: _*) {
       val seen = CrawlEngine.SeenInput(catalog.readSeenBucketed(1),
-        Some(catalog.readSeenV2(1, cfg.seenBuckets)), None)
-      val plan = finalPlan(CrawlEngine.flagAgainstSeen(cand, seen, None, cfg, flip = false))
+        catalog.readSeenV2(1, cfg.seenBuckets), None)
+      val plan = finalPlan(CrawlEngine.flagAgainstSeen(cand, seen, bloom, cfg, flip = false))
       val isV2Scan: SparkPlan => Boolean = _.isInstanceOf[BatchScanExec]
       assert(nodes(plan).exists(isV2Scan), plan)
       assert(exchangesAbove(plan)(isV2Scan).isEmpty, plan)
