@@ -17,7 +17,7 @@ import scala.util.control.NonFatal
   *
   * Scale notes (10^10-document corpora):
   *  - exact dedup: one hash-shuffle on xxhash64(text); map-side partial agg.
-  *  - MinHash-LSH: candidate generation shuffles on (band_idx, band_hash) —
+  *  - MinHash-LSH: candidate generation shuffles on (band_idx, band_key) —
   *    uniform by construction; verification joins only candidate pairs,
   *    never the full cross product.
   *  - SimHash: Manku-style multi-table banding — C(k+2, 2) two-block
@@ -58,17 +58,11 @@ object Dedup {
   /** tokens = lowercase whitespace split. */
   def tokensCol(text: Column): Column = split(trim(lower(text)), "\\s+")
 
-  /** k-token shingles; texts shorter than k yield one whole-text shingle.
-    * REFERENCE composition (r6) — the hot paths use [[distinctShingles]]
-    * (identical values, one fused pass; HotPathEquivalenceSpec). */
-  def shinglesCol(tokens: Column, k: Int): Column =
-    when(size(tokens) < k, array(concat_ws(" ", tokens)))
-      .otherwise(transform(sequence(lit(0), size(tokens) - k),
-        i => concat_ws(" ", slice(tokens, i + 1, lit(k)))))
-
-  /** `array_distinct(shinglesCol(tokens, k))` fused into one pass (r6) —
-    * the interpreted transform/slice/concat_ws composition was the
-    * measured dominant cost of the minhash state build. */
+  /** Distinct k-token shingles (texts shorter than k yield one whole-text
+    * shingle) in one fused pass (r6) — the interpreted
+    * transform/slice/concat_ws composition it replaced, kept as the
+    * reference in HotPathEquivalenceSpec, was the measured dominant cost of
+    * the minhash state build. */
   def distinctShingles(tokens: Column, k: Int): Column =
     HotPathFunctions.distinct_shingles(tokens, k)
 
@@ -138,23 +132,60 @@ object Dedup {
     (reps, stars)
   }
 
-  /** Cap a banded frame's hot buckets (embed_neardup's sub-split pattern,
-    * Similarity.embeddingNearDupPairs): buckets wider than `maxBucket` rows
-    * are sub-split by `subKeyCol` — a key from an INDEPENDENT hash family
-    * that near-duplicates still share with high probability, while the
-    * unrelated rows crowding a saturated bucket scatter across it. Buckets
-    * at or under the cap keep sub_bucket = 0 (recall untouched). The hot
-    * set is tiny by construction (≤ rows/maxBucket buckets), so it
-    * broadcasts. */
-  private def subSplitHot(banded: DataFrame, bucketCols: Seq[String],
-      subKeyCol: Column, maxBucket: Long): DataFrame = {
-    val hot = banded.groupBy(bucketCols.map(col): _*)
+  /** The hot-bucket cap of every banded scheme ([[minhashPairs]],
+    * [[simhashPairs]], Similarity.nearDupBuckets): a bucket of `banded`
+    * (keyed by `keyCols`) wider than `maxBucket` rows is re-keyed by its
+    * rows' `subs` (array<bigint>, one output row per element) — keys from an
+    * INDEPENDENT hash family that near-duplicates still share with high
+    * probability, while the unrelated rows crowding a saturated bucket
+    * scatter across it. A cold bucket keeps one row per input row with
+    * sub_bucket = 0 (recall untouched); hot and cold rows never share a
+    * bucket, so 0 cannot meet a hot row's sub key. The hot set is tiny by
+    * construction (≤ rows/maxBucket buckets), so it broadcasts. */
+  private[datapipe] def capHotBuckets(banded: DataFrame, keyCols: Seq[String],
+      subs: Column, maxBucket: Long): DataFrame = {
+    val hot = banded.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__bucket_n"))
       .filter(col("__bucket_n") > maxBucket)
-    banded.join(broadcast(hot), bucketCols, "left")
-      .withColumn("sub_bucket",
-        when(col("__bucket_n").isNotNull, subKeyCol).otherwise(lit(0L)))
+    banded.join(broadcast(hot), keyCols, "left")
+      .withColumn("sub_bucket", explode(
+        when(col("__bucket_n").isNotNull, subs).otherwise(array(lit(0L)))))
       .drop("__bucket_n")
+  }
+
+  /** The banded near-dup engine both schemes run: band → hot-bucket cap
+    * ([[capHotBuckets]]) → self-join → `verify` → distinct. A scheme supplies
+    *  - `bands`: per rep row, `array<struct<key: bigint, subs: array<bigint>>>`
+    *    — one bucket key per band and the sub keys that re-key it when hot;
+    *  - `carry`: the rep columns `verify` reads, as `<c>_a` / `<c>_b`;
+    *  - `verify`: a predicate checked BEFORE the distinct — filter-then-
+    *    distinct ≡ distinct-then-filter row for row, and a pair sharing many
+    *    bands arrives once per band, so the distinct's exchange carries
+    *    fewer rows (SimHash: measured 648k → ~100k at sf0.1).
+    * Returns distinct (id_a < id_b, carried columns) rep-level candidates.
+    *
+    * Plan shape: the self-join and the distinct carry only (ids, band key,
+    * sub key, carried columns), never a scheme's heavy arrays. Two frames
+    * are persisted and registered: `reps` (scanned by the census, the probe
+    * and the caller's verification — for MinHash the signature subtree, 66
+    * minima passes per row, would otherwise run once per consumer; measured
+    * 2× wall) and the thin keyed frame both join sides scan. */
+  private def bandedCandidates(reps: DataFrame, bands: Column, carry: Seq[String],
+      maxBucket: Long, verify: Column): DataFrame = {
+    val state = registerLsh(reps.persist(StorageLevel.MEMORY_AND_DISK))
+    val banded = state
+      .select(col("id") +: carry.map(col) :+ posexplode(bands).as(Seq("band_idx", "b")): _*)
+      .select(col("id") +: carry.map(col) :+ col("band_idx") :+
+        col("b.key").as("band_key") :+ col("b.subs").as("subs"): _*)
+    val keyed = registerLsh(capHotBuckets(banded, Seq("band_idx", "band_key"),
+      col("subs"), maxBucket).drop("subs").persist(StorageLevel.MEMORY_AND_DISK))
+    def side(s: String): DataFrame = keyed.select(
+      Seq(col("band_idx"), col("band_key"), col("sub_bucket"), col("id").as(s"id_$s")) ++
+        carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), Seq("band_idx", "band_key", "sub_bucket"))
+      .filter(col("id_a") < col("id_b") && verify)
+      .select((Seq("id_a", "id_b") ++ carry.map(_ + "_a") ++ carry.map(_ + "_b")).map(col): _*)
+      .distinct()
   }
 
   /** Exact-dup pre-collapse plus the per-representative MinHash state:
@@ -186,82 +217,42 @@ object Dedup {
     (base, stars)
   }
 
-  /** Rep-level MinHash-LSH candidate pairs (pre-verification) — exposed
-    * package-private for the plan audit and the candidate-volume spec. */
+  /** Rep-level MinHash-LSH candidate pairs (pre-verification), the rep
+    * shingles and the exact-dup stars. Band i's key is the fused
+    * `band_hashes` over signature slice i (value-identical to
+    * xxhash64(concat_ws(",", casts)); HotPathEquivalenceSpec); its one sub
+    * key is an extra `subRows`-hash band from permutations the signature
+    * does not use — an independent family, so a true near-dup pair at
+    * Jaccard s still collides w.p. ~s^subRows. */
   private[datapipe] def minhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
       k: Int, numHashes: Int, bands: Int,
       maxBucket: Long, subRows: Int): (DataFrame, DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-
-    val (base0, stars) = minhashState(df, idCol, textCol, k, numHashes)
-    // sub-split key: an extra `subRows`-hash band from permutations the
-    // signature does not use — an independent family, so rows that share
-    // a hot bucket by saturation (not similarity) scatter, while a true
-    // near-dup pair at Jaccard s still collides w.p. ~s^subRows. The extra
-    // minima come from the same one-pass kernel as the signature (r6).
+    val (base, stars) = minhashState(df, idCol, textCol, k, numHashes)
     val extraSalts = minhashSalts(numHashes + subRows).drop(numHashes)
-    val base = base0
-      .withColumn("__sub_mins",
-        HotPathFunctions.minhash_minima(col("sh_hashes"), extraSalts))
-      // one `subRows`-wide band over the extra minima — element_at(.., 1) of
-      // the fused band_hashes reproduces xxhash64(concat_ws(",", casts))
-      // bit-for-bit (HotPathEquivalenceSpec)
-      .withColumn("sub_key",
-        element_at(HotPathFunctions.band_hashes(col("__sub_mins"), subRows), 1))
-      .drop("__sub_mins")
-      // materialize: the signature subtree (66 array_min·xxhash64 passes
-      // over the shingle hashes) feeds FOUR consumers — the banding, the
-      // hot-bucket census, and both sides of the survivor shingle join.
-      // Without this each consumer recomputes it (measured 2× wall on the
-      // bench corpus); with it the LSH index state is built exactly once —
-      // the shape a real pipeline wants at any scale (the index IS the
-      // artifact). Spill-safe: MEMORY_AND_DISK.
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    registerLsh(base)
-
-    // r6: all `bands` band keys in one fused pass over the signature —
-    // value-identical to the interpreted
-    // xxhash64(concat_ws(",", transform(slice(sig, ...), cast))) chain it
-    // replaces (HotPathEquivalenceSpec asserts bit-equality)
-    val banded0 = base.select(col("id"), col("sub_key"),
-        posexplode(HotPathFunctions.band_hashes(col("sig"), rows)))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_hash")
-    val banded = subSplitHot(banded0, Seq("band_idx", "band_hash"),
-      col("sub_key"), maxBucket)
-      .select("id", "band_idx", "band_hash", "sub_bucket")
-      // thin (4 columns, ~40 B/row) and scanned three times: the hot-bucket
-      // census upstream plus both self-join sides
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    registerLsh(banded)
-
-    val candidates = banded.as("a")
-      .join(banded.as("b"), Seq("band_idx", "band_hash", "sub_bucket"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    (candidates, base.select(col("id"), col("shingles")), stars)
+    val reps = base
+      .withColumn("band_hashes", HotPathFunctions.band_hashes(col("sig"), numHashes / bands))
+      .withColumn("sub_key", element_at(HotPathFunctions.band_hashes(
+        HotPathFunctions.minhash_minima(col("sh_hashes"), extraSalts), subRows), 1))
+    val bandKeys = array((1 to bands).map(j => struct(element_at(col("band_hashes"), j).as("key"),
+      array(col("sub_key")).as("subs"))): _*)
+    (bandedCandidates(reps, bandKeys, Nil, maxBucket, lit(true)),
+      reps.select(col("id"), col("shingles")), stars)
   }
 
   /** MinHash + LSH near-duplicate pairs: exact-dup pre-collapse → shingle →
-    * signature → band → capped bucket-join → exact-Jaccard verification.
+    * signature → [[bandedCandidates]] → exact-Jaccard verification.
     * Returns (id_a, id_b, jaccard) with jaccard ≥ threshold; exact-duplicate
     * groups appear as (representative, member) star edges at jaccard 1.0 and
     * cross-group pairs at representative level (closure-equivalent to the
     * full pair set under [[dedupClusters]] — see [[collapseExact]]).
     *
-    * Plan shape (matters at corpus scale): the shingle-hash array is
-    * materialized ONCE per row before the 64 per-permutation minima read it;
-    * the banded self-join and the pair `distinct` carry only (ids, band key,
-    * sub bucket) — never the shingle arrays — and the heavy shingle payload
-    * is joined back only for the surviving candidate pairs. Buckets wider
-    * than `maxBucket` are sub-split by an independent extra MinHash band
-    * ([[subSplitHot]]): within an oversized bucket a true pair at Jaccard s
-    * survives w.p. ~s^subRows per band — and near-dup pairs share many of
-    * the `bands` tables, so the miss probability compounds down; pairs in
-    * buckets at or under the cap are never dropped.
+    * The heavy shingle payload is joined back only for the surviving
+    * candidate pairs. Within a bucket wider than `maxBucket` a true pair at
+    * Jaccard s survives w.p. ~s^subRows per band — and near-dup pairs share
+    * many of the `bands` tables, so the miss probability compounds down;
+    * pairs in buckets at or under the cap are never dropped.
     *
     * Caching contract: the returned (lazy) plan reads two persisted
     * intermediates (signature state and the thin banded frame) that stay
@@ -309,8 +300,8 @@ object Dedup {
       simhash64(array_distinct(tokensCol(col(textCol)))).as("simhash"))
   }
 
-  /** SimHash candidate pairs (pre-verification) under Manku-style
-    * multi-table banding: split the 64-bit fingerprint into
+  /** SimHash candidate pairs within `maxHamming`, distance-verified, under
+    * Manku-style multi-table banding: split the 64-bit fingerprint into
     * `blocks = maxHamming + 2` bit-blocks; ≤ maxHamming differing bits
     * touch ≤ maxHamming blocks, leaving ≥ 2 intact, so EVERY true pair
     * shares at least one of the C(blocks, 2) two-block composite keys
@@ -318,11 +309,18 @@ object Dedup {
     * (vs the 16-bit single-block keys of the naive 4-band scheme), so the
     * per-table bucket count scales to 10^9+ corpora instead of capping at
     * 65,536 buckets whose population — and the within-bucket self-join —
-    * would otherwise grow linearly/quadratically with corpus size. */
+    * would otherwise grow linearly/quadratically with corpus size.
+    *
+    * Hot-bucket sub keys (multi-probe): one per NON-combo block, its
+    * (slot, block value) packed into one long — a pair still meets in a
+    * hot table if ANY block outside the combo is intact. With ≥ 2 intact
+    * blocks, a pair is lost to the cap only when it has EXACTLY 2 (one
+    * dirty bit in each of the k other blocks) AND its single intact table
+    * is saturated; for ≥ 3, some shared table keeps an intact non-combo
+    * block. */
   private[datapipe] def simhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int, maxBucket: Long = 10000L): (DataFrame, DataFrame) = {
-    import PipeFunctions._
     require(maxHamming >= 1 && maxHamming <= 6,
       "blocks = maxHamming + 2 must stay within the 64-bit fingerprint")
     val blocks = maxHamming + 2
@@ -331,72 +329,19 @@ object Dedup {
       val (off, w) = ranges(i)
       shiftright(col("simhash"), off).bitwiseAND(lit((1L << w) - 1L))
     }
-    val combos = for (i <- 0 until blocks; j <- (i + 1) until blocks) yield (i, j)
-
-    val all = simhashTable(df, idCol, textCol)
     // pre-collapse identical fingerprints (hamming 0 by definition — every
     // exact text duplicate, and any token-set duplicate, lands here): a
     // 10^6-copy boilerplate group otherwise shares the bucket of EVERY
     // two-block table and the self-join goes quadratic
-    val (reps, stars) = collapseExact(all, col("simhash"))
-
+    val (reps, stars) = collapseExact(simhashTable(df, idCol, textCol), col("simhash"))
     // per table (i, j): the bucket key packs the two blocks into disjoint
-    // 16-bit lanes; `subs` carries one (slot = block index, val = block
-    // value) probe per NON-combo block, used only if the bucket turns hot
-    val banded0 = reps.select(col("id"), col("simhash"),
-      posexplode(array(combos.map { case (i, j) =>
-        val rest = (0 until blocks).filterNot(m => m == i || m == j)
-        struct(
-          shiftleft(block(i), 16).bitwiseOR(block(j)).as("key"),
-          array(rest.map(m =>
-            struct(lit(m).as("slot"), block(m).as("v"))): _*).as("subs"))
-      }: _*)))
-      .withColumnRenamed("pos", "band_idx")
-      .select(col("id"), col("simhash"), col("band_idx"),
-        col("col.key").as("band_key"), col("col.subs").as("subs"))
-      // scanned twice (hot-bucket census + the probe join) — materialize so
-      // the fingerprint/banding pass runs once
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    registerLsh(banded0)
-
-    // hot-bucket sub-split (embed_neardup's cap pattern, multi-probe form):
-    // rows in buckets over `maxBucket` are re-keyed by EVERY non-combo
-    // block — a pair still meets if ANY block outside the combo is intact
-    // in ANY shared table. With blocks = k + 2 a pair within hamming k has
-    // ≥ 2 intact blocks; it can only be lost to the cap when it has EXACTLY
-    // 2 (one dirty bit in each of the k other blocks) AND its single intact
-    // table is saturated — for |intact| ≥ 3, some shared table keeps an
-    // intact non-combo block, so recall is unaffected. Cold buckets stay
-    // single-row (slot -1), so the fan-out prices only the hot set.
-    val hot = banded0.groupBy("band_idx", "band_key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-    val coldProbe = array(struct(lit(-1).as("slot"), lit(0L).as("v")))
-    val banded = banded0
-      .join(broadcast(hot), Seq("band_idx", "band_key"), "left")
-      .withColumn("probe", explode(
-        when(col("__bucket_n").isNotNull, col("subs")).otherwise(coldProbe)))
-      .select(col("id"), col("simhash"), col("band_idx"), col("band_key"),
-        col("probe.slot").as("sub_slot"), col("probe.v").as("sub_val"))
-
-    val bandedP = registerLsh(
-      banded.persist(StorageLevel.MEMORY_AND_DISK)) // both join sides
-    val a = bandedP.select(col("band_idx"), col("band_key"),
-      col("sub_slot"), col("sub_val"),
-      col("id").as("id_a"), col("simhash").as("sh_a"))
-    val b = bandedP.select(col("band_idx"), col("band_key"),
-      col("sub_slot"), col("sub_val"),
-      col("id").as("id_b"), col("simhash").as("sh_b"))
-    // r6: verify the (cheap, codegen) hamming distance BEFORE the distinct —
-    // filter-then-distinct ≡ distinct-then-filter row for row, and the
-    // multi-table join emits each surviving pair up to C(blocks,2) times, so
-    // the distinct's exchange carries ~6× fewer rows (measured 648k → ~100k
-    // at sf0.1). simhashCandidates therefore returns DISTANCE-VERIFIED
-    // candidates; simhashPairs' own filter is a no-op kept for shape.
-    val candidates = a.join(b, Seq("band_idx", "band_key", "sub_slot", "sub_val"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(bit_count(col("sh_a").bitwiseXOR(col("sh_b"))) <= maxHamming)
-      .select("id_a", "id_b", "sh_a", "sh_b").distinct()
+    // 16-bit lanes
+    val bandKeys = array((for (i <- 0 until blocks; j <- (i + 1) until blocks) yield
+      struct(shiftleft(block(i), 16).bitwiseOR(block(j)).as("key"),
+        array((0 until blocks).filterNot(m => m == i || m == j).map(m =>
+          lit(m.toLong << 32).bitwiseOR(block(m))): _*).as("subs"))): _*)
+    val candidates = bandedCandidates(reps, bandKeys, Seq("simhash"), maxBucket,
+      bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))) <= maxHamming)
     (candidates, stars)
   }
 
@@ -411,10 +356,10 @@ object Dedup {
     * table is saturated (see [[simhashCandidates]]).
     *
     * Caching contract (same as [[minhashPairs]]): the returned lazy plan
-    * reads two persisted intermediates (the raw banded frame and the
-    * probe-expanded one) that stay registered until the session ends —
-    * repeated identical calls reuse them (CacheManager dedupes by plan);
-    * a long-running pipeline cycling many DISTINCT corpora should call
+    * reads two persisted intermediates (the fingerprint reps and the keyed
+    * banded frame) that stay registered until the session ends — repeated
+    * identical calls reuse them (CacheManager dedupes by plan); a
+    * long-running pipeline cycling many DISTINCT corpora should call
     * [[releaseLshState]] (or `spark.catalog.clearCache()`) between them or
     * the cached frames accumulate. */
   def simhashPairs(
@@ -423,9 +368,8 @@ object Dedup {
     val (candidates, stars) =
       simhashCandidates(df, idCol, textCol, maxHamming, maxBucket)
     candidates
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))).as("hamming"))
       .unionByName(stars.withColumn("hamming", lit(0))) // bit_count is INT
   }
 
@@ -433,39 +377,8 @@ object Dedup {
   // Near-duplicate clustering: connected components over a pair set
   // ------------------------------------------------------------------
 
-  /** Connected components over an undirected edge list `(srcCol, dstCol)`
-    * — the alternating large-star / small-star contraction (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14).
-    * Returns `(id, component)` for every vertex that appears in an edge,
-    * with `component` = the smallest vertex id in its component.
-    *
-    * Why this algorithm at corpus scale (the consumer is near-dup pair
-    * sets over 10^9+ documents):
-    *  - converges in O(log² n) rounds worst-case (single digits in
-    *    practice — near-dup graphs are unions of shallow quasi-cliques),
-    *    vs O(diameter) for plain label propagation, whose worst case is a
-    *    10^6-hop chain of pairwise-similar documents;
-    *  - each round is two min-aggregations + two key-shuffle joins on the
-    *    vertex id — no `collect_set` of neighbor lists anywhere, so a
-    *    mega-component (every boilerplate page sharing one template)
-    *    never materializes a giant array in one task: its star edges
-    *    spread across tasks by vertex key;
-    *  - every intermediate edge set is `localCheckpoint`ed: the iteration
-    *    would otherwise stack 2 joins per round onto one logical plan and
-    *    re-analysis cost grows superlinearly with rounds (a long-lineage
-    *    iterative plan is the classic Spark iterative-algorithm trap; a
-    *    fault-tolerant deployment would use reliable `checkpoint` to a
-    *    cluster FS instead — same call shape).
-    *
-    * Convergence is detected by an order-insensitive edge-set signature
-    * (count + sum of per-edge xxhash64 widened to decimal — overflow-safe
-    * under ANSI) going stable across one round; the star transforms are
-    * idempotent on their fixpoint, so the extra round is the detection
-    * cost, not a correctness risk. Fails fast (require) if `maxIter`
-    * rounds pass without convergence rather than returning a partial
-    * clustering. */
   /** One alternating large-star + small-star contraction round — exposed
-    * (package-private) for the datapipe plan audit. Input and output edge
+    * (package-private) for PipePlanShapeSpec. Input and output edge
     * sets are directed large → small; output is pre-checkpoint. */
   private[datapipe] def alternatingStep(e: DataFrame): DataFrame = {
     // r6: the per-star minima are attached via windows over src — one
@@ -494,6 +407,37 @@ object Dedup {
       .distinct()
   }
 
+  /** Connected components over an undirected edge list `(srcCol, dstCol)`
+    * — the alternating large-star / small-star contraction (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC'14).
+    * Returns `(id, component)` for every vertex that appears in an edge,
+    * with `component` = the smallest vertex id in its component.
+    *
+    * Why this algorithm at corpus scale (the consumer is near-dup pair
+    * sets over 10^9+ documents):
+    *  - converges in O(log² n) rounds worst-case (single digits in
+    *    practice — near-dup graphs are unions of shallow quasi-cliques),
+    *    vs O(diameter) for plain label propagation, whose worst case is a
+    *    10^6-hop chain of pairwise-similar documents;
+    *  - each round is two windowed min-aggregations on the vertex id
+    *    ([[alternatingStep]]) — no `collect_set` of neighbor lists, so a
+    *    mega-component (every boilerplate page sharing one template)
+    *    never materializes a giant array in one task: its star edges
+    *    spread across tasks by vertex key;
+    *  - every intermediate edge set is `localCheckpoint`ed: the iteration
+    *    would otherwise stack every round onto one logical plan and
+    *    re-analysis cost grows superlinearly with rounds (a long-lineage
+    *    iterative plan is the classic Spark iterative-algorithm trap; a
+    *    fault-tolerant deployment would use reliable `checkpoint` to a
+    *    cluster FS instead — same call shape).
+    *
+    * Convergence is detected by an order-insensitive edge-set signature
+    * (count + sum of per-edge xxhash64 widened to decimal — overflow-safe
+    * under ANSI) going stable across one round; the star transforms are
+    * idempotent on their fixpoint, so the extra round is the detection
+    * cost, not a correctness risk. Fails fast (require) if `maxIter`
+    * rounds pass without convergence rather than returning a partial
+    * clustering. */
   def connectedComponents(
       edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       maxIter: Int = 50): DataFrame = {

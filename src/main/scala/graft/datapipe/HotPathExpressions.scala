@@ -37,7 +37,8 @@ object HotPathKernels {
   private val comma = UTF8String.fromString(",")
 
   /** Distinct k-token shingles in ONE pass over a token array — fused
-    * equivalent of `array_distinct(Dedup.shinglesCol(tokens, k))`:
+    * equivalent of `array_distinct(shinglesCol(tokens, k))`, the
+    * reference composition HotPathEquivalenceSpec keeps:
     * for n = size(tokens) < k one whole-text shingle (all tokens joined by
     * " "), else one shingle per window i ∈ [0, n-k] joining tokens
     * [i, i+k) — `concat_ws` semantics (null elements skipped, "" for
@@ -68,7 +69,8 @@ object HotPathKernels {
   /** All LSH band keys in ONE pass over a MinHash signature (`array<long>`,
     * length = bands·rows): element j is `xxhash64(concat_ws(",",
     * transform(slice(sig, j*rows+1, rows), x => x.cast("string"))))` — the
-    * banded-key composition of [[Dedup.minhashCandidates]]. Bit-identity by
+    * banded-key composition of the MinHash band keys that
+    * [[Dedup.bandedCandidates]] blocks on. Bit-identity by
     * construction: long→string is the same `Long.toString` the Cast uses,
     * null elements are skipped by `UTF8String.concatWs` exactly as
     * `concat_ws` skips them, and the hash IS Spark's `XxHash64Function`

@@ -248,21 +248,17 @@ object Similarity {
   /** The (bucket, sub_bucket) blocking state [[embeddingNearDupPairs]]
     * self-joins on: level-1 LSH bucket for every row, plus an INDEPENDENT
     * extra-plane sub-bucket for rows in buckets wider than `maxBucket`
-    * (0 in cold buckets). Public so a verification harness can materialize
+    * (0 in cold buckets; the cap step all banded schemes share,
+    * Dedup.capHotBuckets). Public so a verification harness can materialize
     * it and re-derive the pairing independently — given the blocking
     * state, the within-block self-join + cosine threshold is plain
     * relational algebra (the `embed_neardup` DuckDB oracle). */
   def nearDupBuckets(corpus: DataFrame, vecCol: String,
-      nPlanes: Int, dim: Int, maxBucket: Long, extraPlanes: Int): DataFrame = {
-    val cb = corpus.withColumn("bucket", lshBucket(col(vecCol), nPlanes, dim))
-    val sizes = cb.groupBy("bucket").agg(count(lit(1)).as("bucket_n"))
-    cb.join(broadcast(sizes), Seq("bucket")) // ≤ 2^nPlanes rows
-      .withColumn("sub_bucket",
-        when(col("bucket_n") > maxBucket,
-          lshBucket(col(vecCol), extraPlanes, dim, seedOffset = nPlanes))
-          .otherwise(lit(0)))
-      .drop("bucket_n")
-  }
+      nPlanes: Int, dim: Int, maxBucket: Long, extraPlanes: Int): DataFrame =
+    Dedup.capHotBuckets(
+      corpus.withColumn("bucket", lshBucket(col(vecCol), nPlanes, dim)), Seq("bucket"),
+      array(lshBucket(col(vecCol), extraPlanes, dim, seedOffset = nPlanes).cast("long")),
+      maxBucket).withColumn("sub_bucket", col("sub_bucket").cast("int"))
 
   /** Embedding near-duplicate pairs: same LSH bucket AND cosine ≥ threshold.
     * Exact within-bucket. Buckets larger than `maxBucket` are sub-split with

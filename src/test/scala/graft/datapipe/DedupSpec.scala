@@ -185,10 +185,85 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("banded engine, capped path: both schemes' candidates ≡ a plain-Scala " +
+      "re-derivation at caps 1 (every bucket hot) and 2 (hot beside cold)") {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    // two near copies per doc: (doc, copy, copy) buckets hold 3 rows, so at
+    // cap 2 hot 3-row buckets sit beside cold 2-row ones
+    def variant(off: Long, suffix: String) = docs
+      .withColumn("doc_id", col("doc_id") + off)
+      .withColumn("text", concat(col("text"), lit(suffix)))
+    val corpus = docs.unionByName(variant(100000, " zz")).unionByName(variant(200000, " zz yy"))
+    val caps = Seq(1L, 2L)
+
+    /** Pairs a < b within one bucket of (id, sub keys) members; a bucket
+      * over `cap` rows pairs only members sharing a sub key. */
+    def bucketPairs[S](members: Seq[(Long, Set[S])], cap: Long): Seq[(Long, Long)] =
+      for ((a, sa) <- members; (b, sb) <- members
+           if a < b && (members.size <= cap || sa.intersect(sb).nonEmpty)) yield (a, b)
+    /** (hot buckets, cold buckets of 2 or more rows) */
+    def census(buckets: Iterable[Seq[_]], cap: Long): (Int, Int) =
+      (buckets.count(_.size > cap), buckets.count(b => b.size >= 2 && b.size <= cap))
+    def assertSamePairs(what: String, got: Set[(Long, Long)], expected: Set[(Long, Long)]): Unit = {
+      val (missing, extra) = (expected -- got, got -- expected)
+      assert(missing.isEmpty && extra.isEmpty, s"$what: ${missing.size} missing " +
+        s"${missing.take(5)}, ${extra.size} extra ${extra.take(5)}")
+    }
+
+    try {
+      // MinHash: band j's key is xxhash64 of signature slice j joined by
+      // ",", the sub key the same over minima of 2 extra salts
+      val (reps, _) = Dedup.minhashState(corpus, "doc_id", "text", k = 3, numHashes = 64)
+      val extra = Dedup.minhashSalts(66).drop(64)
+      def bandKey(xs: Seq[Long]): Long = Hash64.string(xs.mkString(","))
+      val mh = reps.select("id", "sig", "sh_hashes").collect().toSeq.map { r =>
+        val shh = r.getSeq[Long](2)
+        val sub = bandKey(extra.map(s => shh.map(h => XXH64.hashLong(h ^ s, Hash64.Seed)).min))
+        (r.getLong(0), r.getSeq[Long](1).grouped(4).map(bandKey).toSeq, sub)
+      }
+      val mhBuckets = mh.flatMap { case (id, keys, sub) =>
+        keys.zipWithIndex.map { case (key, j) => (j, key) -> (id, Set(sub)) }
+      }.groupBy(_._1).values.map(_.map(_._2))
+      // SimHash: 5 blocks of 13,13,13,13,12 bits; table (i, j) keys on
+      // blocks i and j, its sub keys are the (slot, value) of the others
+      val ranges = Seq((0, 13), (13, 13), (26, 13), (39, 13), (52, 12))
+      def blk(fp: Long, m: Int): Long = (fp >>> ranges(m)._1) & ((1L << ranges(m)._2) - 1L)
+      val fps = Dedup.simhashTable(corpus, "doc_id", "text").collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .groupBy(_._2).values.map(_.minBy(_._1)).toSeq // identical fps collapse to the min id
+      val fpOf = fps.toMap
+      val shBuckets = (for (i <- 0 until 5; j <- (i + 1) until 5) yield {
+        val rest = (0 until 5).filterNot(m => m == i || m == j)
+        fps.groupBy { case (_, fp) => (blk(fp, i), blk(fp, j)) }.values
+          .map(_.map { case (id, fp) => (id, rest.map(m => (m, blk(fp, m))).toSet) })
+      }).flatten
+
+      caps.foreach { cap =>
+        val (hot, cold) = census(mhBuckets, cap)
+        assert(hot > 0 && (cap == 1 || cold > 0), s"minhash cap $cap: $hot hot, $cold cold")
+        val expected = mhBuckets.flatMap(bucketPairs(_, cap)).toSet
+        val got = Dedup.minhashCandidates(corpus, "doc_id", "text", k = 3, numHashes = 64,
+            bands = 16, maxBucket = cap, subRows = 2)._1
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assertSamePairs(s"minhash cap $cap", got, expected)
+      }
+      caps.foreach { cap =>
+        val (hot, cold) = census(shBuckets, cap)
+        assert(hot > 0 && (cap == 1 || cold > 0), s"simhash cap $cap: $hot hot, $cold cold")
+        val expected = shBuckets.flatMap(bucketPairs(_, cap))
+          .filter { case (a, b) => java.lang.Long.bitCount(fpOf(a) ^ fpOf(b)) <= 3 }.toSet
+        val got = Dedup.simhashCandidates(corpus, "doc_id", "text", maxHamming = 3,
+            maxBucket = cap)._1
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assertSamePairs(s"simhash cap $cap", got, expected)
+      }
+    } finally Dedup.releaseLshState()
+  }
+
   test("shingles: short texts yield one whole-text shingle") {
     import spark.implicits._
     val out = Seq("one two").toDF("text")
-      .select(Dedup.shinglesCol(Dedup.tokensCol(col("text")), 3)).head().getSeq[String](0)
+      .select(Dedup.distinctShingles(Dedup.tokensCol(col("text")), 3)).head().getSeq[String](0)
     assert(out == Seq("one two"))
   }
 

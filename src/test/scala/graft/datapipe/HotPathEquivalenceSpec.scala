@@ -14,6 +14,14 @@ import graft.spider.SparkTestBase
 class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
+  /** k-token shingles; texts shorter than k yield one whole-text shingle:
+    * the interpreted transform/slice/concat_ws composition
+    * `Dedup.distinctShingles` fuses (with its array_distinct). */
+  private def shinglesCol(tokens: Column, k: Int): Column =
+    when(size(tokens) < k, array(concat_ws(" ", tokens)))
+      .otherwise(transform(sequence(lit(0), size(tokens) - k),
+        i => concat_ws(" ", slice(tokens, i + 1, lit(k)))))
+
   /** MinHash signature (array<long> of length numHashes) over a shingle
     * array column: per salt, `numHashes` interpreted transform/array_min
     * passes, each allocating an intermediate array. */
@@ -93,7 +101,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
       "汉字 test 漢字", "a b c d e f g h i j k l m n o p q r s t u v w x y z")
     val df = texts.toDF("text")
       .withColumn("sh", array_distinct(
-        Dedup.shinglesCol(Dedup.tokensCol(col("text")), 3)))
+        shinglesCol(Dedup.tokensCol(col("text")), 3)))
       .withColumn("shh", transform(col("sh"), s => xxhash64(s)))
     val salts = Dedup.minhashSalts(66)
     assertSameColumns(df.select(
@@ -115,7 +123,7 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val salts = Dedup.minhashSalts(64)
     val df = texts.toDF("text")
       .withColumn("shh", transform(array_distinct(
-        Dedup.shinglesCol(Dedup.tokensCol(col("text")), 3)), s => xxhash64(s)))
+        shinglesCol(Dedup.tokensCol(col("text")), 3)), s => xxhash64(s)))
       .withColumn("sig", HotPathFunctions.minhash_minima(col("shh"), salts))
     val rows = 4
     def refBands(sig: org.apache.spark.sql.Column, bands: Int, r: Int) =
@@ -153,14 +161,14 @@ class HotPathEquivalenceSpec extends AnyFunSuite with SparkTestBase {
         .withColumn("t", Dedup.tokensCol(col("text")))
       assertSameColumns(df.select(
         Dedup.distinctShingles(col("t"), k),
-        array_distinct(Dedup.shinglesCol(col("t"), k))))
+        array_distinct(shinglesCol(col("t"), k))))
     }
     // null-element and empty-array edges
     val edge = Seq(Seq("a", null, "b", "a", null, "b"), Seq.empty[String])
       .toDF("t")
     assertSameColumns(edge.select(
       Dedup.distinctShingles(col("t"), 3),
-      array_distinct(Dedup.shinglesCol(col("t"), 3))))
+      array_distinct(shinglesCol(col("t"), 3))))
   }
 
   test("cosine_sim ≡ the cosineReference composition (exact doubles)") {

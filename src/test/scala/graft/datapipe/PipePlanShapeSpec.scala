@@ -5,10 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec,
   CartesianProductExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.spider.PlanShapes._
@@ -20,10 +22,11 @@ class PipePlanShapeSpec extends AnyFunSuite with SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def nonKeyedJoins(plan: SparkPlan): Seq[SparkPlan] = nodes(plan).filter {
+  private val nonKeyedJoin: SparkPlan => Boolean = {
     case _: CartesianProductExec | _: BroadcastNestedLoopJoinExec => true
     case _ => false
   }
+  private def nonKeyedJoins(plan: SparkPlan): Seq[SparkPlan] = nodes(plan).filter(nonKeyedJoin)
 
   /** A random directed graph, edges cached under `repartition(src)`. */
   private def withEdgeCache[T](body: DataFrame => T): T = {
@@ -110,6 +113,41 @@ class PipePlanShapeSpec extends AnyFunSuite with SparkTestBase {
             assert(!path.exists(_.isInstanceOf[Exchange]), plan))
         }
       }
+    }
+  }
+
+  test("Dedup banded engine: thin self-join inputs, hot set broadcast, keyed joins only") {
+    // the persisted frames' scans, expanded into the plans that fill them
+    def deep(p: SparkPlan): Seq[SparkPlan] = nodes(p).flatMap {
+      case s: InMemoryTableScanExec => s +: deep(s.relation.cachedPlan)
+      case o => Seq(o)
+    }
+    val census: SparkPlan => Boolean = {
+      case f: FilterExec => f.condition.references.exists(_.name == "__bucket_n")
+      case _ => false
+    }
+    withConfs(staticPlanning: _*) {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+      Dedup.releaseLshState() // the frames persist under these confs
+      try for ((scheme, candidates) <- Seq(
+          "minhash" -> Dedup.minhashCandidates(docs, "doc_id", "text", k = 3,
+            numHashes = 64, bands = 16, maxBucket = 10000L, subRows = 2)._1,
+          "simhash" -> Dedup.simhashCandidates(docs, "doc_id", "text", maxHamming = 3)._1)) {
+        val plan = deep(finalPlan(candidates))
+        assert(!plan.exists(nonKeyedJoin), s"$scheme:\n${plan.head}")
+        val selfJoins = plan.collect {
+          case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "sub_bucket")) => j
+        }
+        assert(selfJoins.size == 1, s"$scheme:\n${plan.head}")
+        val inputs = selfJoins.head.children.flatMap(_.output)
+        val heavy = inputs.filter(a => a.dataType.isInstanceOf[ArrayType] ||
+          Seq("shingles", "sh_hashes").exists(a.name.startsWith))
+        assert(heavy.isEmpty, s"$scheme self-join carries ${heavy.map(_.name)}")
+        assert(selfJoins.head.children.flatMap(deep).exists {
+          case b: BroadcastExchangeExec => deep(b).exists(census)
+          case _ => false
+        }, s"$scheme: the hot set does not reach the self-join through a broadcast\n${plan.head}")
+      } finally Dedup.releaseLshState()
     }
   }
 
