@@ -323,26 +323,32 @@ object Dedup {
       maxHamming: Int, maxBucket: Long = 10000L): (DataFrame, DataFrame) = {
     require(maxHamming >= 1 && maxHamming <= 6,
       "blocks = maxHamming + 2 must stay within the 64-bit fingerprint")
+    // pre-collapse identical fingerprints (hamming 0 by definition — every
+    // exact text duplicate, and any token-set duplicate, lands here): a
+    // 10^6-copy boilerplate group otherwise shares the bucket of EVERY
+    // two-block table and the self-join goes quadratic
+    val (reps, stars) = collapseExact(simhashTable(df, idCol, textCol), col("simhash"))
+    val candidates = bandedCandidates(reps, simhashBandKeys(maxHamming), Seq("simhash"),
+      maxBucket, bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))) <= maxHamming)
+    (candidates, stars)
+  }
+
+  /** The band keys of [[simhashCandidates]] over the `simhash` column, one
+    * struct per table (i, j) in (i, j) order: `key` packs block i into the
+    * high 32 bits and block j into the low 32 (every block is at most 22
+    * bits wide, so the lanes are disjoint), `subs` the (slot, block value)
+    * of every other block. */
+  private[datapipe] def simhashBandKeys(maxHamming: Int): Column = {
     val blocks = maxHamming + 2
     val ranges = blockRanges(blocks)
     def block(i: Int): Column = {
       val (off, w) = ranges(i)
       shiftright(col("simhash"), off).bitwiseAND(lit((1L << w) - 1L))
     }
-    // pre-collapse identical fingerprints (hamming 0 by definition — every
-    // exact text duplicate, and any token-set duplicate, lands here): a
-    // 10^6-copy boilerplate group otherwise shares the bucket of EVERY
-    // two-block table and the self-join goes quadratic
-    val (reps, stars) = collapseExact(simhashTable(df, idCol, textCol), col("simhash"))
-    // per table (i, j): the bucket key packs the two blocks into disjoint
-    // 16-bit lanes
-    val bandKeys = array((for (i <- 0 until blocks; j <- (i + 1) until blocks) yield
-      struct(shiftleft(block(i), 16).bitwiseOR(block(j)).as("key"),
+    array((for (i <- 0 until blocks; j <- (i + 1) until blocks) yield
+      struct(shiftleft(block(i), 32).bitwiseOR(block(j)).as("key"),
         array((0 until blocks).filterNot(m => m == i || m == j).map(m =>
           lit(m.toLong << 32).bitwiseOR(block(m))): _*).as("subs"))): _*)
-    val candidates = bandedCandidates(reps, bandKeys, Seq("simhash"), maxBucket,
-      bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))) <= maxHamming)
-    (candidates, stars)
   }
 
   /** SimHash near-duplicate pairs within `maxHamming` (default 3):

@@ -70,10 +70,13 @@ object LinkRank {
         col("out_deg"))
   }
 
+  /** Iterations per eager checkpoint of `pageRank` (the others are lazy). */
+  private val CheckpointEvery = 4
+
   /** PageRank over a directed edge list. Returns `(id, rank)` for every
     * vertex appearing as src or dst; ranks sum to 1.
     *
-    * `checkpointEvery` (r5 — the measured per-iteration driver-action floor,
+    * `CheckpointEvery` (r5 — the measured per-iteration driver-action floor,
     * BENCH/BASELINE.md r4): only every j-th iteration materializes its
     * checkpoint EAGERLY (a driver-blocking action); the iterations between
     * use LAZY localCheckpoints. A lazy checkpoint still converts the frame
@@ -86,11 +89,9 @@ object LinkRank {
     * freed only at eager points, when the window is provably materialized. */
   def pageRank(
       edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 4): DataFrame = {
+      iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .repartition(col("src")) // persisted partitioning: iterations shuffle
@@ -113,7 +114,7 @@ object LinkRank {
     var iter = 0
     var pendingFree: List[DataFrame] = Nil
     while (iter < iterations) {
-      val eager = (iter + 1) % checkpointEvery == 0 || iter == iterations - 1
+      val eager = (iter + 1) % CheckpointEvery == 0 || iter == iterations - 1
       val next = rankStep(e, degrees, ranks, n, damping)
         .localCheckpoint(eager)
       pendingFree ::= ranks

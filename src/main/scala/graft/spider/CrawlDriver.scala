@@ -189,8 +189,6 @@ object CrawlDriver {
           hostBoostCkpt = Some(boost)
           hostBoostCache = Some(
             if (bn <= CrawlConfig.cutoffBroadcastMax) broadcast(boost) else boost)
-          if (cfg.verbose) System.err.println(
-            s"[crawl] hostRank signal ready: $n hosts ranked, $bn boosted")
         }
         hostBoostCache
       }
@@ -233,7 +231,6 @@ object CrawlDriver {
 
     try {
     for (r <- (startRound + 1) to cfg.rounds) {
-      val tR = System.nanoTime()
       // Inputs: from the previous round's in-memory frames (identical
       // content to its in-flight files), or on a run's first round from
       // the snapshot.
@@ -279,7 +276,6 @@ object CrawlDriver {
         frontierInBound, pc.stage, robotsRows, prevLinksN, prebuilt,
         recrawlSrc, recrawlN, hostBoost(r))
       current = Some(out)
-      val tCompute = (System.nanoTime() - tR) / 1e9
 
       // Exact counters + incremental sketch: bloom(r) = bloom(r-1) ⊎ delta
       // per shard; frontier_in(r) = frontier_out(r-1) from the chain.
@@ -297,7 +293,6 @@ object CrawlDriver {
       }
       chainF = roundF.map(_._3)
 
-      val tC = System.nanoTime()
       // Finalize the previous round (its writes drained during our compute),
       // then retire frames two rounds back.
       pending.foreach { p =>
@@ -331,9 +326,6 @@ object CrawlDriver {
       if (cfg.expireKeepLast > 0 && cfg.expireEveryRounds > 0 &&
           r % cfg.expireEveryRounds == 0)
         catalog.expireSnapshots(cfg.expireKeepLast)
-      if (cfg.verbose) System.err.println(
-        f"[crawl] round $r compute=$tCompute%.1fs commit-drain=${(System.nanoTime() - tC) / 1e9}%.1fs " +
-          s"fetched=${out.fetchedN}")
     }
     } catch {
       case NonFatal(e) =>
@@ -359,18 +351,7 @@ object CrawlDriver {
   def crawlFromSf(spark: SparkSession, sfDir: String, cfg: CrawlConfig,
       stateDir: String, replicate: Int = 1, spreadHosts: Boolean = false): DataFrame = {
     import graft.spider.synth.PagesSynth
-    // r6: choose the corpus cache's partition layout before persisting —
-    // a sandbox-scale documents file scans as ONE split (4 MB openCost
-    // floor) and the replicate crossJoin inherits ≤ replicate non-empty
-    // partitions, serializing the html-synth and fetch-join scan stages.
-    // No-op when the scan already meets the session parallelism (the
-    // production case), so nothing is tuned to the local core count.
-    val pages0 = PagesSynth.pages(spark, sfDir, replicate, spreadHosts)
-    val par = spark.sparkContext.defaultParallelism
-    val pages = (if (pages0.rdd.getNumPartitions < par) pages0.repartition(par)
-                 else pages0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pages.count() // materialize once; every round re-joins against it
+    val pages = PagesSynth.cached(PagesSynth.pages(spark, sfDir, replicate, spreadHosts))
     val robots =
       if (spreadHosts)
         PagesSynth.robotsFor(spark, pages

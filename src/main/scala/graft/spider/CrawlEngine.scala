@@ -162,7 +162,7 @@ object CrawlEngine {
     // partitioning the dequeue window requires anyway, so the round still
     // pays one full-row host exchange (plan-audited).
     val robotsSide =
-      if (robotsRows <= cfg.robotsBroadcastMax) broadcast(robots) else robots
+      if (robotsRows <= CrawlConfig.robotsBroadcastMax) broadcast(robots) else robots
     val gated = frontier
       .join(robotsSide, Seq("host"), "left_outer")
       .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(defaultDelayMs)))
@@ -654,8 +654,8 @@ object CrawlEngine {
     if (!cfg.twoPhaseDequeue) {
       eligible.withColumn("rank_in_host", row_number().over(w))
     } else {
-      val s = math.max(2, cfg.saltFactor)
-      val wSalt = Window.partitionBy(col("host"), pmod(col("url_hash"), lit(s.toLong)))
+      val wSalt = Window.partitionBy(col("host"),
+        pmod(col("url_hash"), lit(CrawlConfig.saltFactor.toLong)))
         .orderBy(order: _*)
       eligible
         .withColumn("presel_rank", row_number().over(wSalt))
@@ -682,8 +682,8 @@ object CrawlEngine {
     val pre =
       if (!cfg.twoPhaseDequeue) newEntries
       else {
-        val s = math.max(2, cfg.saltFactor)
-        val wSalt = Window.partitionBy(col("host"), pmod(col("url_hash"), lit(s.toLong)))
+        val wSalt = Window.partitionBy(col("host"),
+          pmod(col("url_hash"), lit(CrawlConfig.saltFactor.toLong)))
           .orderBy(order: _*)
         newEntries
           .withColumn("__adm_pre", row_number().over(wSalt))

@@ -56,17 +56,11 @@ case class CrawlConfig(
     roundLenMs: Long = 4000L,
     nSeeds: Int = 10,
     seedPriority: Int = 100,
-    /** salt buckets per host of the two-phase dequeue ranking */
-    saltFactor: Int = 16,
     /** salted two-phase dequeue ranking for mega-host skew (J4/W1) */
     twoPhaseDequeue: Boolean = false,
     /** dequeued rows above this switch the fetch join from broadcast to
       * shuffled-hash (pages side pre-partitioned by url stays in place) */
     fetchBroadcastMax: Long = 100000L,
-    /** one stderr line per committed round (compute and commit-drain
-      * seconds, fetched count; `tools/scaling_report.py` parses it) and one
-      * when the hostRank signal is ready */
-    verbose: Boolean = false,
     bloomExpectedItems: Long = 1L << 20,
     bloomFpp: Double = 0.03,
     /** Bloom shards (by pmod(url_hash, shards)); each shard is an
@@ -86,14 +80,6 @@ case class CrawlConfig(
       * the history; when the two sides are comparable the fully-distributed
       * classic join is both faster and scales better). */
     seenFlipRatio: Double = 4.0,
-    /** robots-rule rows above this stop broadcasting the robots table into
-      * the frontier gate and shuffle-join it by host instead — at a
-      * 10^10-URL frontier the robots table is 10^7-10^8 host rows (with
-      * prefix lists), no longer broadcastable. The host exchange this
-      * introduces is the SAME partitioning the dequeue window needs, so
-      * Catalyst reuses it: the round still pays exactly one full-row host
-      * exchange. */
-    robotsBroadcastMax: Long = 5000000L,
     /** Compact the seen history every K rounds (0 = off): round r ≡ 0 mod K
       * additionally commits `seen_base` = a complete bucketed base through
       * r, so the membership probe reads O(1 + rounds mod K) file sets
@@ -191,6 +177,19 @@ object CrawlConfig {
     * storage-partitioned over the DSv2 seen reader. Sits at the crossover
     * measured against an 8M-row history (BENCH/BASELINE.md r4). */
   val seenFlipMax: Long = 2000000L
+
+  /** Robots-rule rows above this stop broadcasting the robots table into
+    * the frontier gate and shuffle-join it by host instead — at a
+    * 10^10-URL frontier the robots table is 10^7-10^8 host rows (with
+    * prefix lists), no longer broadcastable. The host exchange this
+    * introduces is the SAME partitioning the dequeue window needs, so
+    * Catalyst reuses it: the round still pays exactly one full-row host
+    * exchange. */
+  val robotsBroadcastMax: Long = 5000000L
+
+  /** Salt buckets per host of the two-phase dequeue ranking and admission
+    * cap (`twoPhaseDequeue`). */
+  val saltFactor: Int = 16
 
   /** Hosts above this stop broadcasting the per-host priority cutoffs and
     * shuffle-join them instead (the exchange is then reused by the dequeue

@@ -21,6 +21,9 @@ import graft.spider.synth.{CorpusStore, PagesSynth}
   */
 object ScalingBench {
 
+  /** Bucket count of a corpus this bench writes itself. */
+  private val CorpusBuckets = 16
+
   case class LevelResult(cpus: Int, fetched: Long, secs: Double, probeGibs: Double,
       taskSecs: Double, deserSecs: Double, tasks: Long,
       fetchWaitSecs: Double, gcSecs: Double, cpuSecs: Double) {
@@ -76,10 +79,9 @@ object ScalingBench {
       // partitions sized to the parallelism level; AQE coalesces the many
       // small crawl-state shuffles (a fixed large P anti-scales: 64 tiny
       // write/shuffle tasks × 32 threads contend on the local FS/scheduler).
-      // GRAFT_PARTS_MULT / GRAFT_AQE are protocol-experiment overrides.
+      // GRAFT_PARTS_MULT is a protocol-experiment override.
       .config("spark.sql.shuffle.partitions",
         (cpus * sys.env.getOrElse("GRAFT_PARTS_MULT", "2").toInt).toString)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
       // Listener events carry a physical-plan description built EAGERLY per
       // action; with nested InMemoryRelation trees that string is MBs and
       // costs driver seconds per job. Truncate it — nothing consumes it
@@ -110,87 +112,50 @@ object ScalingBench {
       // fetchBroadcastMax=0: always the shuffled-hash fetch join — the only
       // strategy that exists at a 10^10-URL frontier (a broadcast build is
       // driver-serial; the bench measures the at-scale path at every round).
-      //
-      // GRAFT_COMPACT_EVERY / GRAFT_EXPIRE_EVERY / GRAFT_EXPIRE_KEEP force
-      // the maintenance cadence so a campaign can measure the in-loop cost
-      // of incremental compaction + snapshot expiration (campaign J): at
-      // the defaults a 4-round run never fires either (compactSeenEvery=8,
-      // expiration off), so their steady-state overhead needs its own
-      // campaign with the cadence dialed down into the run's round count.
-      // GRAFT_MAX_NEW_PER_HOST forces the crawl-trap guard (per-host
-      // admission cap) into the timed loop, so a campaign can measure the
-      // row_number admission window's scaling cost.
-      val cfg = CrawlConfig(rounds = rounds, roundLenMs = 60000L, verbose = true,
-        fetchBroadcastMax = 0L,
-        compactSeenEvery = sys.env.getOrElse("GRAFT_COMPACT_EVERY", "8").toInt,
-        expireEveryRounds = sys.env.getOrElse("GRAFT_EXPIRE_EVERY", "0").toInt,
-        expireKeepLast = sys.env.getOrElse("GRAFT_EXPIRE_KEEP", "0").toInt,
-        maxNewPerHost = sys.env.getOrElse("GRAFT_MAX_NEW_PER_HOST", "0").toInt)
-      // Corpus layout, two modes:
-      //
-      // GRAFT_CORPUS_DIR set (the round-3 campaign default): the corpus is a
-      // url-BUCKETED parquet table (CorpusStore) written ONCE — by
-      // CorpusBuild at full parallelism — and opened read-only by every
-      // run at every level. The bucketed scan reports HashPartitioning(url),
-      // so per-round fetch joins shuffle only the dequeued side and stream
-      // the corpus from tmpfs storage with the vectorized reader: the
-      // design-honest 100-TB posture (bucketed table, nothing pinned in the
-      // block manager), identical input BYTES across all runs/levels, and
-      // no per-run single-threaded synthesis at local[1].
-      //
-      // Unset (legacy / self-contained): synthesize in-JVM, pre-partition by
-      // url, persist. NOTE: persist (columnar cache, partitioning visible to
-      // Catalyst), NOT localCheckpoint — a LogicalRDD leaf loses the hash
-      // partitioning and every round re-exchanges the multi-GB corpus
-      // (measured). GRAFT_PAGES_STORAGE default DISK_ONLY: tmpfs-backed,
-      // keeps the corpus out of the executor heap (heap-cached corpus at
-      // local[1] hit eviction churn at large replicate — round-2 cliffs).
-      val corpusDir = sys.env.get("GRAFT_CORPUS_DIR").filter(_.nonEmpty)
-      val pages = corpusDir match {
-        case Some(dir) =>
-          if (!CorpusStore.exists(dir)) {
-            System.err.println(s"[scaling] corpus at $dir missing — synthesizing")
-            CorpusStore.write(spark,
-              PagesSynth.pages(spark, sfDir, replicate, spreadHosts = true,
-                noiseLen = noiseLen),
-              dir, sys.env.getOrElse("GRAFT_CORPUS_BUCKETS", "16").toInt)
-          }
-          val t = CorpusStore.open(spark, dir)
-          // Guard against a stale dir silently changing the workload: the
-          // opened table must be exactly this run's (sfDir, replicate) shape.
-          val expectRows = PagesSynth.documents(spark, sfDir).count() * replicate
-          require(CorpusStore.rowCount(dir) == expectRows,
-            s"corpus at $dir has ${CorpusStore.rowCount(dir)} rows; " +
-              s"this run expects $expectRows ($sfDir × $replicate) — stale dir?")
-          // decode-warm the vectorized reader on ONE part file (JIT for the
-          // timed scans without a full pre-timed pass over the corpus)
-          val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-          val one =
-            try ls.iterator().asScala.map(_.toString)
-              .filter(f => f.contains("part-") && f.endsWith(".parquet")).take(1).toSeq
-            finally ls.close()
-          one.foreach(f => spark.read.parquet(f)
-            .agg(sum(length(col("html")))).collect())
-          t
-        case None =>
-          val pagesStorage = org.apache.spark.storage.StorageLevel.fromString(
-            sys.env.getOrElse("GRAFT_PAGES_STORAGE", "DISK_ONLY"))
-          val p = PagesSynth.pages(spark, sfDir, replicate, spreadHosts = true,
-              noiseLen = noiseLen)
-            .repartition(cpus * 2, col("url"))
-            .persist(pagesStorage)
-          p.count()
-          p
+      val cfg = CrawlConfig(rounds = rounds, roundLenMs = 60000L, fetchBroadcastMax = 0L)
+      val stateBase = java.nio.file.Paths.get(
+        sys.env.getOrElse("GRAFT_STATE_DIR", System.getProperty("java.io.tmpdir")))
+      java.nio.file.Files.createDirectories(stateBase)
+      // The corpus is a url-BUCKETED parquet table (CorpusStore). With
+      // GRAFT_CORPUS_DIR set it is written ONCE — by CorpusBuild at full
+      // parallelism — and opened read-only by every run at every level
+      // (identical input BYTES across all runs/levels, no per-run
+      // single-threaded synthesis at local[1]); unset, this run writes its
+      // own under the state base. The bucketed scan reports
+      // HashPartitioning(url), so per-round fetch joins shuffle only the
+      // dequeued side and stream the corpus from storage with the
+      // vectorized reader: the design-honest 100-TB posture (bucketed
+      // table, nothing pinned in the block manager).
+      val dir = sys.env.get("GRAFT_CORPUS_DIR").filter(_.nonEmpty).getOrElse(
+        java.nio.file.Files.createTempDirectory(stateBase, "graft-corpus-").toString)
+      if (!CorpusStore.exists(dir)) {
+        System.err.println(s"[scaling] corpus at $dir missing — synthesizing")
+        CorpusStore.write(spark,
+          PagesSynth.pages(spark, sfDir, replicate, spreadHosts = true, noiseLen = noiseLen),
+          dir, CorpusBuckets)
       }
-      val nPages = corpusDir.map(CorpusStore.rowCount).getOrElse(pages.count())
+      val pages = CorpusStore.open(spark, dir)
+      // Guard against a stale dir silently changing the workload: the
+      // opened table must be exactly this run's (sfDir, replicate) shape.
+      val nPages = CorpusStore.rowCount(dir)
+      val expectRows = PagesSynth.documents(spark, sfDir).count() * replicate
+      require(nPages == expectRows,
+        s"corpus at $dir has $nPages rows; " +
+          s"this run expects $expectRows ($sfDir × $replicate) — stale dir?")
+      // decode-warm the vectorized reader on ONE part file (JIT for the
+      // timed scans without a full pre-timed pass over the corpus)
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      val one =
+        try ls.iterator().asScala.map(_.toString)
+          .filter(f => f.contains("part-") && f.endsWith(".parquet")).take(1).toSeq
+        finally ls.close()
+      one.foreach(f => spark.read.parquet(f)
+        .agg(sum(length(col("html")))).collect())
       val robots = PagesSynth.robotsFor(spark,
         pages.select(graft.spider.expr.SpiderFunctions.url_host(col("url")).as("host"))
           .distinct())
       // seeds spread over every replica's host namespace
       val seeds = PagesSynth.seedsFromPages(spark, pages, perReplicaDocs, cfg)
-      val stateBase = java.nio.file.Paths.get(
-        sys.env.getOrElse("GRAFT_STATE_DIR", System.getProperty("java.io.tmpdir")))
-      java.nio.file.Files.createDirectories(stateBase)
       val state = java.nio.file.Files.createTempDirectory(stateBase, "graft-scale-").toString
 
       // Concurrent-pair barrier (GRAFT_BARRIER=<path>,<nParties>): after

@@ -153,6 +153,17 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(pairs.forall(r => r.getLong(0) == 0L && r.getAs[Number](2).longValue == 0L))
   }
 
+  test("simhash band keys: 21/22-bit blocks (maxHamming = 1) keep table (0, 1) " +
+      "keys apart when block 1's high bits equal block 0's value") {
+    import spark.implicits._
+    // fp 1: block0 = 1, block1 = 0; fp 1 << 38: block0 = 0, block1 = 1 << 16
+    // (blocks 22/21/21 bits at offsets 0, 22, 43)
+    val keys = Seq(1L, 1L << 38).toDF("simhash")
+      .select(Dedup.simhashBandKeys(maxHamming = 1).getItem(0).getField("key"))
+      .collect().map(_.getLong(0))
+    assert(keys.distinct.length == 2, s"table (0, 1) keys collide: ${keys.toSeq}")
+  }
+
   test("simhash: forced sub-split (maxBucket=1) loses ONLY the documented corner " +
       "(pairs with exactly 2 intact blocks); >=3 intact blocks always survive") {
     val sample = docs.filter(col("doc_id") < 120)

@@ -117,7 +117,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("two-phase salted dequeue ≡ plain window (J4/W1 skew path is exact)") {
-    val cfg = CrawlConfig(rounds = 3, twoPhaseDequeue = true, saltFactor = 4)
+    val cfg = CrawlConfig(rounds = 3, twoPhaseDequeue = true)
     val oracleRes = CrawlOracle.run(oraclePages, CrawlOracle.seeds(docs, cfg), cfg)
     val catalog = engineCrawl(cfg)
     assert(crawledTuples(catalog, 3) == oracleTuples(oracleRes))
@@ -294,7 +294,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     val df = rows.toDF("url", "url_hash", "host", "priority", "ts")
       .withColumn("warc_ts", timestamp_micros(col("ts"))).drop("ts")
     def run(two: Boolean) = CrawlEngine.capPerHost(df,
-        CrawlConfig(maxNewPerHost = 3, twoPhaseDequeue = two, saltFactor = 4))
+        CrawlConfig(maxNewPerHost = 3, twoPhaseDequeue = two))
       .select("host", "url").collect().map(r => (r.getString(0), r.getString(1))).toSet
     val plain = run(two = false)
     val salted = run(two = true)
@@ -302,8 +302,7 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
     assert(plain.count(_._1 == "trap.example") == 3)
     // E2E: the oracle is phase-agnostic — the salted engine path must still
     // replay it exactly with the cap binding.
-    val cfg = CrawlConfig(rounds = 4, maxNewPerHost = 3,
-      twoPhaseDequeue = true, saltFactor = 4)
+    val cfg = CrawlConfig(rounds = 4, maxNewPerHost = 3, twoPhaseDequeue = true)
     val oracleRes = CrawlOracle.run(oraclePages, CrawlOracle.seeds(docs, cfg), cfg)
     val catalog = engineCrawl(cfg)
     assert(crawledTuples(catalog, 4) == oracleTuples(oracleRes))
@@ -355,15 +354,40 @@ class CrawlEquivalenceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("partitioned robots gate ≡ broadcast gate (strategy fork is exact)") {
-    val oracleRes = CrawlOracle.run(oraclePages,
-      CrawlOracle.seeds(docs, CrawlConfig(rounds = 3)), CrawlConfig(rounds = 3))
-    // threshold 0 forces the host-shuffle robots join every round
-    val part = engineCrawl(CrawlConfig(rounds = 3, robotsBroadcastMax = 0L))
-    assert(crawledTuples(part, 3) == oracleTuples(oracleRes))
-    assert(seenSet(part, 3) == oracleRes.seen)
-    (1 to 3).foreach { r =>
-      assert(part.countersOf(r) == oracleRes.counters(r - 1), s"round $r counters")
+    import PlanShapes._
+    val cfg = CrawlConfig()
+    val robots = PagesSynth.robots(spark, sfDir).toDF()
+    // every corpus url at its seed priority: the gate blocks some of them
+    // and the per-host budgets bind, so the dequeue keeps a residual
+    val frontier =
+      PagesSynth.seedsFromPages(spark, pagesDf, perReplicaDocs = Int.MaxValue, cfg).toDF()
+    val bound = frontier.count()
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    /** (broadcasts the robots side, eligible, dequeued, residual, extracted) */
+    def gate(robotsRows: Long) = withConfs(staticPlanning: _*) {
+      val dq = CrawlEngine.buildDequeue(spark, pagesDf, robots, frontier, 1, cfg,
+        frontierInBound = bound, robotsRows = robotsRows)
+      try {
+        val plan = inlineCaches(finalPlan(dq.eligible), dq.eligible)
+        val broadcastsRobots = nodes(plan).exists {
+          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+            b.output.exists(_.name == "disallow_prefixes")
+          case _ => false
+        }
+        (broadcastsRobots, dq.eligible.count(),
+          rowsOf(dq.dequeued), rowsOf(dq.residual), rowsOf(dq.extracted))
+      } finally dq.cached.foreach(CrawlEngine.release)
     }
+    val (bcast, bEligible, bDequeued, bResidual, bExtracted) = gate(0L)
+    val (shuf, sEligible, sDequeued, sResidual, sExtracted) =
+      gate(CrawlConfig.robotsBroadcastMax + 1)
+    assert(bcast && !shuf, "the two robots gates must be two plans")
+    assert(bEligible < bound && bResidual.nonEmpty, "the gate and the budgets must bind")
+    assert(sEligible == bEligible)
+    assert(sDequeued == bDequeued)
+    assert(sResidual == bResidual)
+    assert(sExtracted == bExtracted)
   }
 
   test("seen compaction ≡ no compaction (pure layout; manifests carry the base)") {

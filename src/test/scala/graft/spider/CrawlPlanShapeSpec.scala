@@ -130,7 +130,7 @@ class CrawlPlanShapeSpec extends AnyFunSuite with SparkTestBase {
     withConfs(staticPlanning: _*) {
       // robots broadcast, then robots too large to broadcast: the host
       // exchange of the robots join must serve the rank window too
-      for (robotsRows <- Seq(0L, cfg.robotsBroadcastMax + 1)) {
+      for (robotsRows <- Seq(0L, CrawlConfig.robotsBroadcastMax + 1)) {
         val dq = CrawlEngine.buildDequeue(spark, pages, robots, frontier, 1, cfg,
           frontierInBound = 1000L, robotsRows = robotsRows)
         try {
@@ -175,7 +175,7 @@ class CrawlPlanShapeSpec extends AnyFunSuite with SparkTestBase {
       .toDF("url", "url_hash", "host", "priority")
       .withColumn("warc_ts", timestamp_micros(lit(1700000000000000L) + pmod(col("url_hash"), lit(7L))))
       .withColumn("budget", lit(5L))
-    val twoPhase = cfg.copy(twoPhaseDequeue = true, saltFactor = 4, maxNewPerHost = 3)
+    val twoPhase = cfg.copy(twoPhaseDequeue = true, maxNewPerHost = 3)
 
     /** Two windows, (host, salt) below host, with the bound on `preselCol`
       * filtered between them. */

@@ -27,16 +27,11 @@ mkdir -p "$OUT"
 # Shared bucketed corpus (CorpusStore): built ONCE at full parallelism, then
 # every run at every level opens it read-only — identical input bytes across
 # the whole campaign and no per-run single-threaded synthesis at local[1].
-# Set GRAFT_CORPUS_DIR=- to force the legacy per-run persist path.
-if [ "${GRAFT_CORPUS_DIR:-}" != "-" ]; then
-  export GRAFT_CORPUS_DIR=${GRAFT_CORPUS_DIR:-/dev/shm/graft-corpus-$(basename "$SF")-r${REP}-n${NOISE}}
-  if [ ! -f "$GRAFT_CORPUS_DIR/_graft_corpus.json" ]; then
-    echo "=== building shared corpus at $GRAFT_CORPUS_DIR $(date +%T) ===" | tee -a "$OUT/interleaved.log"
-    tools/run_bench.sh graft.spider.tools.CorpusBuild "$GRAFT_CORPUS_DIR" "$SF" "$REP" "$NOISE" \
-      2>> "$OUT/interleaved.log" | tee -a "$OUT/interleaved.log"
-  fi
-else
-  unset GRAFT_CORPUS_DIR
+export GRAFT_CORPUS_DIR=${GRAFT_CORPUS_DIR:-/dev/shm/graft-corpus-$(basename "$SF")-r${REP}-n${NOISE}}
+if [ ! -f "$GRAFT_CORPUS_DIR/_graft_corpus.json" ]; then
+  echo "=== building shared corpus at $GRAFT_CORPUS_DIR $(date +%T) ===" | tee -a "$OUT/interleaved.log"
+  tools/run_bench.sh graft.spider.tools.CorpusBuild "$GRAFT_CORPUS_DIR" "$SF" "$REP" "$NOISE" \
+    2>> "$OUT/interleaved.log" | tee -a "$OUT/interleaved.log"
 fi
 
 echo "=== interleaved $SEQ start $(date +%T) n=$N rep=$REP rounds=$R ===" | tee -a "$OUT/interleaved.log"
