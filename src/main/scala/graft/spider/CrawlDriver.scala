@@ -49,9 +49,9 @@ object CrawlDriver {
     val params = sketchParamsOf(cfg)
     // In-crawl expiration deletes below the newest compaction anchor at or
     // before latest-keepLast+1; the deepest in-flight reader under commit
-    // pipelining resolves its seen history at round r-2 (the current round's
-    // async discovery aggregate), so keepLast must keep the anchor at or
-    // below that (>= 2), +1 margin.
+    // pipelining resolves its seen history at round r-2 (round r's seen
+    // probe, which its staged seen write may still be materializing), so
+    // keepLast must keep the anchor at or below that (>= 2), +1 margin.
     // Only the ACTIVE combination is constrained: expireEveryRounds with
     // expireKeepLast == 0 is inert (the loop never fires expiration), so it
     // is not rejected.
@@ -126,20 +126,13 @@ object CrawlDriver {
         (0, blob)
     }
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-
-    // Cross-round state rides a Future chain: each round's discovery
-    // aggregate (candN/enqueuedN/Bloom delta) completes during the NEXT
-    // round's fetch phase; the chain assembles exact manifest counters, the
-    // merged Bloom, and the cumulative seen-row count without any of them
-    // blocking a round boundary. Seed values are exact (manifest metadata).
-    case class Chain(bloom: Array[Byte], seenRows: Long, frontierOut: Long)
-    val seenRows0: Long = catalog.seenRowsThrough(startRound)
-    val frontierOut0: Long =
+    // Cross-round state through the newest round: the merged Bloom, the
+    // exact seen-row count and |frontier|, from the manifest for the round
+    // the run starts from, then from each round's returned counters.
+    var bloom = bloom0
+    var seenRows = catalog.seenRowsThrough(startRound)
+    var frontierIn =
       catalog.manifest(startRound).get("tables").get("frontier").get("rows").asLong()
-    var chainF: Future[Chain] = Future.successful(Chain(bloom0, seenRows0, frontierOut0))
 
     // Depth-1 commit pipeline: `pending` is the previous round, its table
     // writes draining on pool threads while this round computes over its
@@ -149,13 +142,14 @@ object CrawlDriver {
     // may still read the previous round's caches (hoststate chains one
     // round), so frames live for two rounds after their own.
     case class Pend(round: Int, pc: CrawlCatalog#PendingCommit,
-        out: CrawlEngine.RoundOutput,
-        roundF: Future[(RoundCounters, Array[Byte], Chain)])
+        out: CrawlEngine.RoundOutput, counters: RoundCounters, bloomAfter: Array[Byte]) {
+      def finalizeCommit(): Unit = pc.finalizeCommit(Some(bloomAfter), params, counters)
+    }
     var pending: Option[Pend] = None
     var retired: Option[CrawlEngine.RoundOutput] = None
-    // the newest round output: pending, retired, or (when the pending
-    // round's finalize throws) neither
-    var current: Option[CrawlEngine.RoundOutput] = None
+    // the newest round: pending, retired, or (when the pending round's
+    // finalize throws) neither
+    var current: Option[Pend] = None
 
     // hostRank priority signal (cfg.hostRankFromRound = K): computed ONCE
     // per run — at the first round ≥ K+2, when round K's manifest is final
@@ -212,17 +206,9 @@ object CrawlDriver {
     // under it. Round outputs are freed once each (destroying a broadcast
     // twice throws), and a stopped SparkContext has nothing left to free.
     def releaseRun(failed: Boolean): Unit = if (!spark.sparkContext.isStopped) {
-      pending.foreach(_.pc.abandon())
-      val outs = (pending.map(_.out) ++ current ++ retired).toSeq.distinct
-      outs.foreach { o =>
-        Await.ready(o.rawStatsF, Duration.Inf)
-        Await.ready(o.nextDequeueF, Duration.Inf)
-      }
-      outs.foreach(cleanup)
-      // the next round's prebuilt dequeue frames (a no-op after the final
-      // round, whose output carries none)
-      current.flatMap(_.nextDequeueF.value).flatMap(_.toOption).flatten
-        .foreach(_.cached.foreach(CrawlEngine.release))
+      val rounds = (pending ++ current).toSeq.distinct
+      rounds.foreach(_.pc.abandon())
+      (rounds.map(_.out) ++ retired).distinct.foreach(cleanup)
       // The hostRank boost lives for the whole run (it joins every boosted
       // round); Dataset.unpersist is a no-op on its checkpoint-backed frame.
       hostBoostCkpt.foreach(CrawlEngine.release)
@@ -239,26 +225,15 @@ object CrawlDriver {
           catalog.readSeenBucketed(committedRound),
           catalog.readSeenV2(committedRound, cfg.seenBuckets),
           extra)
-      val (frontier, seen, hostState, frontierInBound, prevLinksN, prebuilt) = pending match {
+      val (frontier, seen, hostState, prevLinksN) = pending match {
         case Some(p) =>
-          // dequeue frames for this round were Catalyst-analyzed on a pool
-          // thread during the previous round — ready by now in the steady
-          // state, so this await is ~instant
-          val pre = Await.result(p.out.nextDequeueF, Duration.Inf)
           (p.out.frontierNext, seenInput(p.round - 1, Some(p.out.seenDelta)),
-            p.out.hostStateNext, p.out.frontierOutBound, p.out.linksN, pre)
+            p.out.hostStateNext, p.out.linksN)
         case None =>
-          // Exact |frontier| from round r-1's committed manifest — NOT the
-          // startRound value, which goes stale after the first un-pipelined
-          // round and could under-report the bound (an underestimate can
-          // flip a strategy toward broadcast of a frontier-scale side).
           // prev links (the flip-strategy signal) is exact from the
           // manifest counters; 0 for a seed-only round-0 parent.
-          val bound = catalog.manifest(r - 1)
-            .get("tables").get("frontier").get("rows").asLong()
           (catalog.readFrontier(r - 1), seenInput(r - 1, None),
-            catalog.readHostState(r - 1), bound,
-            catalog.countersOf(r - 1).links_extracted, None)
+            catalog.readHostState(r - 1), catalog.countersOf(r - 1).links_extracted)
       }
       // timed re-crawl source: the committed crawl log of round r0 (final
       // by construction — the recrawlEvery >= pipeline-depth+1 require
@@ -269,35 +244,26 @@ object CrawlDriver {
           (catalog.readCrawledRound(r0), catalog.countersOf(r0).fetched)
         else (None, 0L)
       }
-      val prevF = chainF
       val pc = catalog.beginCommit(r)
       val out = CrawlEngine.runRound(spark, pages, robotsDf, frontier, seen,
-        hostState, r, cfg, prevF.map(c => (c.bloom, c.seenRows)),
-        frontierInBound, pc.stage, robotsRows, prevLinksN, prebuilt,
-        recrawlSrc, recrawlN, hostBoost(r))
-      current = Some(out)
+        hostState, r, cfg, bloom, seenRows, frontierIn, pc.stage, robotsRows,
+        prevLinksN, recrawlSrc, recrawlN, hostBoost(r))
 
       // Exact counters + incremental sketch: bloom(r) = bloom(r-1) ⊎ delta
-      // per shard; frontier_in(r) = frontier_out(r-1) from the chain.
-      val roundF: Future[(RoundCounters, Array[Byte], Chain)] = for {
-        prev <- prevF
-        (candN, enqueuedN, delta) <- out.rawStatsF
-      } yield {
-        val merged = delta.fold(prev.bloom)(Sketches.mergeShardedBlobs(prev.bloom, _))
-        val frontierOut = (out.eligibleN - out.dequeuedN) + enqueuedN + out.recrawlN
-        val counters = RoundCounters(r, prev.frontierOut,
-          prev.frontierOut - out.eligibleN, out.dequeuedN, out.fetchedN,
-          out.dequeuedN - out.fetchedN, out.linksN, candN, candN - enqueuedN,
-          enqueuedN, frontierOut)
-        (counters, merged, Chain(merged, prev.seenRows + enqueuedN, frontierOut))
-      }
-      chainF = roundF.map(_._3)
+      // per shard; frontier_in(r) = frontier_out(r-1).
+      val counters = RoundCounters(r, frontierIn, frontierIn - out.eligibleN,
+        out.dequeuedN, out.fetchedN, out.dequeuedN - out.fetchedN, out.linksN,
+        out.candN, out.candN - out.enqueuedN, out.enqueuedN, out.frontierOut)
+      bloom = out.bloomDelta.fold(bloom)(Sketches.mergeShardedBlobs(bloom, _))
+      seenRows += out.enqueuedN
+      frontierIn = out.frontierOut
+      val done = Pend(r, pc, out, counters, bloom)
+      current = Some(done)
 
       // Finalize the previous round (its writes drained during our compute),
       // then retire frames two rounds back.
       pending.foreach { p =>
-        val (counters, bloomAfter, _) = Await.result(p.roundF, Duration.Inf)
-        p.pc.finalizeCommit(Some(bloomAfter), params, counters)
+        p.finalizeCommit()
         retired.foreach(cleanup)
         retired = Some(p.out)
       }
@@ -309,10 +275,9 @@ object CrawlDriver {
       if (cfg.compactSeenEvery > 0 && r % cfg.compactSeenEvery == 0)
         pc.stageSeenCompaction(CrawlConfig.compactMaxFilesPerBucket)
       if (r < cfg.rounds) {
-        pending = Some(Pend(r, pc, out, roundF))
+        pending = Some(done)
       } else {
-        val (counters, bloomAfter, _) = Await.result(roundF, Duration.Inf)
-        pc.finalizeCommit(Some(bloomAfter), params, counters)
+        done.finalizeCommit()
         pending = None
         retired.foreach(cleanup)
         retired = Some(out)

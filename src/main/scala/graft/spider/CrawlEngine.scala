@@ -44,8 +44,15 @@ import graft.spider.sketch.Sketches
   *                 is SCANNED (semi-join against the broadcast candidate
   *                 keys, bucket column in the join key) and never shuffled;
   *                 candidates then anti-join the tiny hit set. One job
-  *                 computes candN + enqueuedN + the round's Bloom delta.
+  *                 computes candN + enqueuedN + the round's Bloom delta
+  *                 before the round returns.
   *   5 commit:   frontier/seen staged; CrawlDriver finalizes the manifest
+  *
+  * A round is a function of values: it takes the merged Bloom and seen-row
+  * count through the previous round and returns its exact counters, its
+  * Bloom delta and its next-round state frames. Its only concurrency is
+  * inside it (the scheduling counts, the residual checkpoint and the
+  * discovery plan overlap the fetch job) plus the catalog's staged writes.
   *
   * The Bloom prefilter splits candidates into definitely-new (bloom says
   * absent — a Bloom filter has no false negatives, so these skip the exact
@@ -55,9 +62,10 @@ import graft.spider.sketch.Sketches
   */
 object CrawlEngine {
 
+  /** What one round returns. Every field is final when runRound returns;
+    * only the round's staged table writes may still be draining. */
   case class RoundOutput(
       round: Int,
-      /** Synchronous scheduling/fetch facts, exact at return time. */
       eligibleN: Long,
       dequeuedN: Long,
       fetchedN: Long,
@@ -65,11 +73,13 @@ object CrawlEngine {
       /** rows re-admitted into frontierNext by the timed re-crawl (0 when
         * cfg.recrawlEvery == 0 or no source round exists yet). */
       recrawlN: Long,
-      /** The discovery aggregate — (candN, enqueuedN, bloomDelta) — runs as
-        * a Future: nothing inside THIS round needs its results (they feed
-        * the manifest counters and the NEXT round's Bloom), so the job
-        * overlaps the next round's fetch phase. CrawlDriver chains it. */
-      rawStatsF: scala.concurrent.Future[(Long, Long, Option[Array[Byte]])],
+      /** distinct discovered candidates, and the new ones admitted into
+        * frontierNext and the seen delta */
+      candN: Long,
+      enqueuedN: Long,
+      /** the sharded Bloom over the enqueued urls (None when none were);
+        * the driver merges it into the previous round's Bloom */
+      bloomDelta: Option[Array[Byte]],
       persisted: Seq[DataFrame],
       /** Block-backed RDDs of the round's `localCheckpoint` leaves —
         * `Dataset.unpersist()` is a no-op on these (not in the CacheManager),
@@ -82,19 +92,10 @@ object CrawlEngine {
         * writes (same content) drain in the background. */
       frontierNext: DataFrame,
       seenDelta: DataFrame,
-      hostStateNext: DataFrame,
-      /** Round r+1's dequeue/fetch frames, Catalyst-analyzed on a pool
-        * thread during round r — the driver awaits (instantly, in the
-        * steady state) and passes them as `prebuilt` so the next round
-        * skips its plan-construction head. None on the final round. */
-      nextDequeueF: scala.concurrent.Future[Option[DequeueFrames]]) {
-    /** Upper bound on |frontierNext|, available synchronously — drives the
-      * next round's broadcast-vs-shuffle strategy choices (the exact value
-      * arrives with rawStatsF; a bound can only flip a choice toward the
-      * shuffle path, the one that is correct at design scale anyway).
-      * `recrawlN` (exact, from the source round's committed counters) covers
-      * the timed re-crawl re-admissions folded into frontierNext. */
-    def frontierOutBound: Long = (eligibleN - dequeuedN) + linksN + recrawlN
+      hostStateNext: DataFrame) {
+    /** |frontierNext|: the residual, the enqueued urls and the timed
+      * re-crawl re-admissions — the frontier row count the manifest records. */
+    def frontierOut: Long = (eligibleN - dequeuedN) + enqueuedN + recrawlN
   }
 
   /** The round's seen-set input, split by representation:
@@ -124,13 +125,8 @@ object CrawlEngine {
     pmod(urlHash, lit(buckets.toLong)).cast("int")
 
   /** The dequeue + fetch-side frames of one round — pure PLAN construction
-    * (no actions; persists are lazy registrations). Catalyst analysis of
-    * this tree measured 1.4-1.7 s of driver-serial time per round, so the
-    * driver prebuilds round r+1's frames on a pool thread during round r
-    * (see [[RoundOutput.nextDequeueF]]) instead of paying it at round
-    * start. */
+    * (no actions; persists are lazy registrations). */
   case class DequeueFrames(
-      round: Int,
       eligible: DataFrame,
       hb: DataFrame,
       ranked: DataFrame,
@@ -143,10 +139,8 @@ object CrawlEngine {
 
   /** Build the dequeue/fetch plans for `round` over `frontier` (stage 1 +
     * the fetch join of stage 2; see runRound's stage map). `frontierInBound`
-    * only picks broadcast-vs-shuffle strategies; when prebuilding for the
-    * NEXT round the driver passes an overestimate, which per the documented
-    * invariant can only flip a choice toward the shuffle path — the one
-    * that is correct at design scale anyway. */
+    * (the driver passes the exact |frontier|) only picks broadcast-vs-shuffle
+    * strategies. */
   def buildDequeue(
       spark: SparkSession,
       pages: DataFrame,
@@ -240,7 +234,7 @@ object CrawlEngine {
       .drop("page", "html")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    DequeueFrames(round, eligible, hb, ranked, dequeued, residual, extracted)
+    DequeueFrames(eligible, hb, ranked, dequeued, residual, extracted)
   }
 
   def runRound(
@@ -252,14 +246,15 @@ object CrawlEngine {
       hostStatePrev: DataFrame,
       round: Int,
       cfg: CrawlConfig,
-      /** (merged Bloom through round-1, exact seen rows through round-1) —
-        * completes when the PREVIOUS round's discovery aggregate lands;
-        * awaited only at this round's discovery stage, so the previous
-        * aggregate overlaps this round's dequeue + fetch phases. */
-      prevStats: scala.concurrent.Future[(Array[Byte], Long)],
-      /** |frontier| upper bound (exact when read from a manifest) — strategy
-        * decisions only; exact counters are assembled by CrawlDriver. */
-      frontierInBound: Long,
+      /** merged seen Bloom through round-1 — gates THIS round's prefilter
+        * (exact semantics: a stale filter could mark a just-enqueued URL
+        * "definitely new") */
+      bloom: Array[Byte],
+      /** exact seen rows through round-1 — the flip-vs-classic signal */
+      seenRows: Long,
+      /** exact |frontier| — strategy decisions only; the counters are
+        * assembled by CrawlDriver. */
+      frontierIn: Long,
       stage: (String, DataFrame) => Unit,
       /** exact robots row count (driver materializes the table once) —
         * drives the broadcast-vs-host-shuffle robots gate strategy. */
@@ -274,10 +269,6 @@ object CrawlEngine {
         * speed, never correctness. 0 (round 1) reads as "links ≪ seen" —
         * the flip regime, right for a seeded round. */
       prevLinksN: Long = 0L,
-      /** Round-r dequeue/fetch frames prebuilt during round r-1 (see
-        * [[RoundOutput.nextDequeueF]]) — skips the 1.4-1.7 s of Catalyst
-        * analysis otherwise paid serially at round start. */
-      prebuilt: Option[DequeueFrames] = None,
       /** Timed re-crawl source (cfg.recrawlEvery > 0): the COMMITTED crawl
         * log of round `round + 1 - recrawlEvery` — columns (url, url_hash,
         * host, fetch_ts) — whose urls are re-admitted into frontierNext at
@@ -286,7 +277,7 @@ object CrawlEngine {
         * function of committed state: resume replays it identically. */
       recrawl: Option[DataFrame] = None,
       /** exact |recrawl| from the source round's committed counters —
-        * feeds frontierOutBound and the driver's frontier_out counter. */
+        * feeds frontierOut. */
       recrawlN: Long = 0L,
       /** hostRank priority signal (cfg.hostRankFromRound): `(host, boost)`
         * with boost ∈ [1, 9] — newly discovered urls joined by host get
@@ -299,10 +290,7 @@ object CrawlEngine {
     // ---- 1 dequeue: robots gate + per-host politeness budget top-k ----
     // (O1/W1: the window's hash exchange on host IS the explicit host
     // partitioning; trailing sort keys make the order total ⇒ replayable.)
-    prebuilt.foreach(p => require(p.round == round,
-      s"prebuilt dequeue frames are for round ${p.round}, not $round"))
-    val dq = prebuilt.getOrElse(
-      buildDequeue(spark, pages, robots, frontier, round, cfg, frontierInBound, robotsRows))
+    val dq = buildDequeue(spark, pages, robots, frontier, round, cfg, frontierIn, robotsRows)
     val hb = dq.hb
     val extracted = dq.extracted
 
@@ -311,7 +299,7 @@ object CrawlEngine {
     // arithmetic (Σ_h min(budget_h, Σ_p n_hp)) — ranking not needed to count.
     // The scalar ACTION runs as a Future overlapping the fetch job: nothing
     // in the round's dataflow needs these counts (strategy choices use the
-    // manifest-known frontierIn bound), only the end-of-round counters do.
+    // exact frontierIn), only the end-of-round counters do.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -329,15 +317,14 @@ object CrawlEngine {
     val residualCkptF = Future { dq.residual.localCheckpoint(false) }
 
     // ---- 4 discover (PLAN build + compile, overlapping the fetch job) ----
-    // Everything driver-serial about the discovery stage — awaiting the
-    // previous round's sketch, broadcasting it, building the candidate /
-    // probe plans, and compiling the new-entries checkpoint (toRdd) — runs
-    // on a pool thread WHILE the fetch job executes below. Measured 2-3 s
-    // per round of tail time in round 2; now it hides behind the 4-20 s
-    // fetch. The future is not job-free: under AQE, building newCkpt
-    // (localCheckpoint(false)) runs the checkpoint's shuffle stages as jobs
-    // on this pool thread, and they compete with the fetch for executor
-    // slots.
+    // Everything driver-serial about the discovery stage — broadcasting the
+    // previous round's sketch, building the candidate / probe plans, and
+    // compiling the new-entries checkpoint (toRdd) — runs on a pool thread
+    // WHILE the fetch job executes below. Measured 2-3 s per round of tail
+    // time in round 2; now it hides behind the 4-20 s fetch. The future is
+    // not job-free: under AQE, building newCkpt (localCheckpoint(false))
+    // runs the checkpoint's shuffle stages as jobs on this pool thread, and
+    // they compete with the fetch for executor slots.
     val discoveryF = Future {
       val cand = extracted
         .select(col("warc_ts").as("parent_ts"), explode(col("outlinks")).as("raw_url"))
@@ -352,17 +339,11 @@ object CrawlEngine {
         .withColumn("url_hash", xxhash64(col("url")))
         .persist(StorageLevel.MEMORY_AND_DISK)
 
-      // The previous round's discovery aggregate lands here (typically it
-      // finished during our dequeue) — its merged Bloom gates THIS round's
-      // prefilter (exact semantics: a stale filter could mark a
-      // just-enqueued URL "definitely new").
-      val (bloomBytes, seenRows) = Await.result(prevStats, Duration.Inf)
-
       // Sharded Bloom arrives via SparkContext.broadcast — tasks pull the
       // blocks once per executor; the expression tree stays tiny at any
       // filter size (round 1 shipped the filter as a literal: task binaries
       // ballooned and a driver-held monolith cannot exist at 10^10 URLs).
-      val bloomBc = spark.sparkContext.broadcast(Sketches.shardedFrom(bloomBytes))
+      val bloomBc = spark.sparkContext.broadcast(Sketches.shardedFrom(bloom))
 
       // J3 strategy, cost-based with no count job on the path: prevLinksN
       // (last round's links, a proxy for this round's candidate volume) vs
@@ -472,19 +453,6 @@ object CrawlEngine {
       stage("hostedges", hostEdges)
     }
 
-    // Round r+1's dequeue/fetch frames, built over frontierNext as soon as
-    // both checkpoint leaves are compiled — another 1.4-1.7 s of Catalyst
-    // analysis chained off the round's pool work instead of the next
-    // round's head. NOT awaited here (the driver awaits at round r+1
-    // start, by when it has long finished). The bound is frontierOutBound =
-    // (eligibleN − dequeuedN) + linksN, exact facts of THIS round by the
-    // time this future runs — a GUARANTEED overestimate of |frontier(r+1)|
-    // = residual + enqueued, since enqueued ≤ links. (The earlier
-    // `frontierInBound + 4·prevLinks` heuristic under-reported when links
-    // grew >4× round-over-round, which could flip the fetch join toward
-    // broadcasting a frontier-scale side — the dangerous direction.) An
-    // overestimate can only flip a strategy toward the shuffle path, the
-    // at-scale-correct one; exactness is never at stake.
     // timed re-crawl re-admissions (see the `recrawl` param): the source
     // round's crawl log mapped to frontier entries — recrawlPriority, this
     // round as discovered_round, the source fetch_ts as the ordering
@@ -498,17 +466,6 @@ object CrawlEngine {
         col("fetch_ts").as("warc_ts")))
       case None => base
     }
-
-    val nextDequeueF: Future[Option[DequeueFrames]] =
-      if (round >= cfg.rounds) Future.successful(None)
-      else for {
-        (_, _, _, newCkpt) <- discoveryF
-        residualCkpt <- residualCkptF
-      } yield {
-        val fn = withRecrawl(residualCkpt.unionByName(newCkpt))
-        val nextBound = (eligibleN - dequeuedN) + linksN + recrawlN
-        Some(buildDequeue(spark, pages, robots, fn, round + 1, cfg, nextBound, robotsRows))
-      }
 
     // ---- tail: both checkpoint leaves were compiled during the fetch ----
     // frontierNext is a UNION OF TWO LEAVES — the residual checkpoint and
@@ -525,11 +482,9 @@ object CrawlEngine {
     stage("seen", seenDelta)
 
     // ONE job: candidate count + enqueued count + the round's Bloom delta
-    // (sharded, over the new urls only — nulls are skipped by the agg).
-    // Launched LAST, as a Future: its results feed the manifest counters and
-    // the NEXT round's Bloom, neither of which gates this round's dataflow,
-    // so the aggregate overlaps the next round's dequeue + fetch phases.
-    val rawStatsF = Future {
+    // (sharded, over the new urls only — nulls are skipped by the agg). It
+    // runs last, while the staged writes drain.
+    val (candN, enqueuedN, bloomDelta) =
       if (cfg.maxNewPerHost > 0) {
         // Capped admission: enqueuedN and the Bloom delta must cover the
         // ADMITTED set only (dropped candidates stay unseen — the sketch
@@ -548,14 +503,13 @@ object CrawlEngine {
         val enqueuedN = if (s3.isNullAt(1)) 0L else s3.getLong(1)
         (candN, enqueuedN, if (enqueuedN > 0) Some(s3.getAs[Array[Byte]](2)) else None)
       }
-    }
 
     val ckptRdds = Seq(residualCkpt, newCkpt, hostStateNextP)
       .flatMap(GraftColumnBridge.checkpointRdd)
-    RoundOutput(round, eligibleN, dequeuedN, fetchedN, linksN, recrawlN, rawStatsF,
+    RoundOutput(round, eligibleN, dequeuedN, fetchedN, linksN, recrawlN,
+      candN, enqueuedN, bloomDelta,
       dq.cached ++ Seq(cand, flagged, hostStateNextP, frontierNext, seenDelta),
-      ckptRdds, Seq(bloomBc), frontierNext, seenDelta, hostStateNextP,
-      nextDequeueF)
+      ckptRdds, Seq(bloomBc), frontierNext, seenDelta, hostStateNextP)
     } catch {
       case NonFatal(e) =>
         Seq(hbRowF, residualCkptF, discoveryF).foreach(Await.ready(_, Duration.Inf))
@@ -627,8 +581,10 @@ object CrawlEngine {
           Seq("seen_bucket", "url_hash"), "left_outer")
         val withAll = seen.extra match {
           case Some(d) =>
-            // same (bucket, hash) keys so the exchange introduced for the
-            // committed join is reusable; the delta is round-sized.
+            // same (bucket, hash) keys; the delta is round-sized, but the
+            // committed join's output carries the bucket grouping, not the
+            // hash partitioning this join needs, so the candidate side is
+            // shuffled a second time here.
             withC.join(
               d.select("seen_bucket", "url_hash").withColumn("hit_d", lit(true)),
               Seq("seen_bucket", "url_hash"), "left_outer")
@@ -647,23 +603,8 @@ object CrawlEngine {
     * mega-host skew (J4): per-(host,salt) top-budget is a superset of the
     * per-host top-budget, so phase 2 over the ~S·budget survivors per host is
     * exact while phase 1 spreads a hot host over S tasks. */
-  private[spider] def rankPerHost(eligible: DataFrame, cfg: CrawlConfig): DataFrame = {
-    val order = Seq(col("priority").desc, col("warc_ts").asc,
-      col("url_hash").asc, col("url").asc)
-    val w = Window.partitionBy("host").orderBy(order: _*)
-    if (!cfg.twoPhaseDequeue) {
-      eligible.withColumn("rank_in_host", row_number().over(w))
-    } else {
-      val wSalt = Window.partitionBy(col("host"),
-        pmod(col("url_hash"), lit(CrawlConfig.saltFactor.toLong)))
-        .orderBy(order: _*)
-      eligible
-        .withColumn("presel_rank", row_number().over(wSalt))
-        .filter(col("presel_rank") <= col("budget"))
-        .drop("presel_rank")
-        .withColumn("rank_in_host", row_number().over(w))
-    }
-  }
+  private[spider] def rankPerHost(eligible: DataFrame, cfg: CrawlConfig): DataFrame =
+    rankInHost(eligible, cfg, col("budget"), "presel_rank", "rank_in_host")
 
   /** O4: crawl-trap admission cap — at most `maxNewPerHost` new urls per
     * host per round, by the frontier's total order. One row_number window
@@ -675,24 +616,30 @@ object CrawlEngine {
     * same salted pre-rank as rankPerHost spreads that host over S tasks
     * first: per-(host, salt) top-K is a superset of the per-host top-K, so
     * the exact phase-2 window sees at most S·K rows per host. */
-  private[spider] def capPerHost(newEntries: DataFrame, cfg: CrawlConfig): DataFrame = {
+  private[spider] def capPerHost(newEntries: DataFrame, cfg: CrawlConfig): DataFrame =
+    rankInHost(newEntries, cfg, lit(cfg.maxNewPerHost), "__adm_pre", "__adm_rn")
+      .filter(col("__adm_rn") <= cfg.maxNewPerHost)
+      .drop("__adm_rn")
+
+  /** `df` with `rankCol` = its row_number within its host by the frontier's
+    * total order (priority desc, warc_ts, url_hash, url). Under
+    * cfg.twoPhaseDequeue a salted window (`preCol`, dropped again) first
+    * keeps each (host, url_hash mod saltFactor) partition's top `k` rows,
+    * a superset of the host's top `k`. */
+  private def rankInHost(df: DataFrame, cfg: CrawlConfig, k: Column,
+      preCol: String, rankCol: String): DataFrame = {
     val order = Seq(col("priority").desc, col("warc_ts").asc,
       col("url_hash").asc, col("url").asc)
-    val w = Window.partitionBy("host").orderBy(order: _*)
     val pre =
-      if (!cfg.twoPhaseDequeue) newEntries
+      if (!cfg.twoPhaseDequeue) df
       else {
         val wSalt = Window.partitionBy(col("host"),
           pmod(col("url_hash"), lit(CrawlConfig.saltFactor.toLong)))
           .orderBy(order: _*)
-        newEntries
-          .withColumn("__adm_pre", row_number().over(wSalt))
-          .filter(col("__adm_pre") <= cfg.maxNewPerHost)
-          .drop("__adm_pre")
+        df.withColumn(preCol, row_number().over(wSalt))
+          .filter(col(preCol) <= k)
+          .drop(preCol)
       }
-    pre
-      .withColumn("__adm_rn", row_number().over(w))
-      .filter(col("__adm_rn") <= cfg.maxNewPerHost)
-      .drop("__adm_rn")
+    pre.withColumn(rankCol, row_number().over(Window.partitionBy("host").orderBy(order: _*)))
   }
 }

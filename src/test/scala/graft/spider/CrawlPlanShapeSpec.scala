@@ -113,6 +113,61 @@ class CrawlPlanShapeSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("classic seen path with the in-flight delta: delta joined on (seen_bucket, url_hash), is_new exact") {
+    withConfs(staticPlanning ++ storagePartitioned: _*) {
+      // the previous round's uncommitted delta, an in-memory checkpoint as
+      // the engine carries it, disjoint from the committed rounds
+      val deltaRows = frontier.filter(pmod(col("url_hash"), lit(6L)) === 2)
+        .select(col("url_hash"), col("url")).localCheckpoint(true)
+      val delta = deltaRows
+        .withColumn("seen_bucket", CrawlEngine.seenBucketCol(col("url_hash"), cfg.seenBuckets))
+      // as in a crawl, the Bloom already covers the in-flight delta
+      val bloomAll = spark.sparkContext.broadcast(Sketches.shardedFrom(
+        CrawlDriver.bloomOf(catalog.readSeen(1).unionByName(deltaRows), cfg)))
+      try {
+        val seen = CrawlEngine.SeenInput(catalog.readSeenBucketed(1),
+          catalog.readSeenV2(1, cfg.seenBuckets), Some(delta))
+        val flagged = CrawlEngine.flagAgainstSeen(cand, seen, bloomAll, cfg, flip = false)
+        val plan = finalPlan(flagged)
+        val isV2Scan: SparkPlan => Boolean = _.isInstanceOf[BatchScanExec]
+        assert(nodes(plan).exists(isV2Scan), plan)
+        // the committed history still joins storage-partitioned: no
+        // exchange between its scan and the shuffled-hash join over it
+        // (the delta join above re-shuffles that join's candidate-sized
+        // output, not the history)
+        joinsOver(plan)(isV2Scan).collect { case j: ShuffledHashJoinExec => j } match {
+          case Seq(j) =>
+            val seenSide = j.children.filter(nodes(_).exists(isV2Scan))
+            assert(seenSide.size == 1 && exchangesAbove(seenSide.head)(isV2Scan).isEmpty, plan)
+            val build = if (j.buildSide == BuildLeft) j.left else j.right
+            assert(!nodes(build).exists(isV2Scan), s"the seen history is the build side:\n$plan")
+          case other => fail(s"expected one ShuffledHashJoin over the seen scan, got " +
+            s"${other.map(_.nodeName)}:\n$plan")
+        }
+        val deltaJoins = nodes(plan).collect {
+          case j: BaseJoinExec if j.children.exists(_.output.exists(_.name == "hit_d")) => j
+        }
+        assert(deltaJoins.size == 1, plan)
+        Seq(deltaJoins.head.leftKeys, deltaJoins.head.rightKeys).foreach { keys =>
+          assert(keys.map(_.references.map(_.name).toSet) ==
+            Seq(Set("seen_bucket"), Set("url_hash")), plan)
+        }
+
+        val committed = catalog.readSeen(1).select("url_hash")
+        val expected = cand.join(committed.unionByName(deltaRows.select("url_hash")),
+          Seq("url_hash"), "left_anti").select("url_hash").collect().map(_.getLong(0)).sorted
+        val isNew = flagged.filter(col("is_new")).select("url_hash")
+          .collect().map(_.getLong(0)).sorted
+        assert(flagged.count() == cand.count())
+        assert(deltaRows.count() > 0 && expected.length < cand.count() - committed.count())
+        assert(isNew.toSeq == expected.toSeq)
+      } finally {
+        CrawlEngine.release(deltaRows)
+        bloomAll.destroy()
+      }
+    }
+  }
+
   test("dequeue: one full-row host exchange under the rank window, cutoff filter below it") {
     val fullRowByHost: SparkPlan => Boolean = {
       case e: ShuffleExchangeExec => e.output.exists(_.name == "url") &&

@@ -2,8 +2,16 @@
 """Local replica of the driver's DuckDB correctness compare: for each query
 result parquet written by graft.Verify, run the corresponding oracle SQL in
 DuckDB over the same testdata tables and compare schema + values (columns
-sorted by name, rows compared as sorted multisets)."""
-import sys, json, glob, os
+sorted by name, rows compared as sorted multisets).
+
+    python3 tools/check_oracle.py <sfDir> <Verify outDir>
+
+Oracle SQL that reads graft.Verify's fixture parquet
+(/tmp/graft-verify-fixtures/<name>-<sf>/) is pointed at the fixtures of
+<sfDir>'s scale (its directory name), so a compare never reads another
+scale's oracle. Verify writes fixtures only for -Dgraft.verify.fixtureSf
+(default sf0.01); a key whose fixtures are missing fails."""
+import sys, json, glob, os, re
 import duckdb
 import pyarrow.parquet as pq
 
@@ -16,6 +24,8 @@ for p in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+fixture_sf = os.path.basename(os.path.normpath(sfdir))
+fixture_dir = re.compile(r"(/tmp/graft-verify-fixtures/[A-Za-z0-9_]+)-[^/']+/")
 ok = fail = 0
 rows_only = []
 for d in sorted(glob.glob(f"{outdir}/*/")):
@@ -25,7 +35,8 @@ for d in sorted(glob.glob(f"{outdir}/*/")):
         rows_only.append((key, t.num_rows))
         continue
     try:
-        duck = con.execute(oracle[key]).fetch_arrow_table()
+        sql = fixture_dir.sub(lambda m: f"{m.group(1)}-{fixture_sf}/", oracle[key])
+        duck = con.execute(sql).fetch_arrow_table()
     except Exception as e:
         print(f"FAIL {key}: duckdb error: {e}")
         fail += 1
